@@ -79,7 +79,8 @@ def describe_string(df: DataFrame, cols: Sequence[str]) -> DataFrame:
         # (-cnt, value) — (lowest -cnt = highest cnt, then smallest value).
         one = counts.agg(
             F.count(F.lit(1)).cast("string").alias("unique"),
-            F.sum("cnt").cast("string").alias("count"),
+            # all-null column: no value counts, but pandas reports count 0
+            F.coalesce(F.sum("cnt"), F.lit(0)).cast("string").alias("count"),
             F.min_by(F.col("v"), F.struct((-F.col("cnt")).alias("n"), F.col("v").alias("v"))).alias("top"),
             F.max("cnt").cast("string").alias("freq"),
         ).select(

@@ -55,9 +55,9 @@ def train_sq8(df: DataFrame, id_col: str = "vec_id",
 
     Assumes a UNIFORM vector width (every row's array has the same
     length — the contract of every embedding table here): ``dim`` is
-    inferred from the first row when not passed, so a ragged corpus
-    would be truncated to the first vector's width (the old posexplode
-    formulation would instead have widened to the longest). Emptiness
+    inferred from the first row when not passed, so longer vectors are
+    truncated to ``dim``, and a vector shorter than ``dim`` raises a
+    ``ValueError`` naming the first missing dimension. Emptiness
     is detected from count(1) in the same aggregate, not from lo0's
     nullness (dimension 0 being all-null is not emptiness) — r12
     ADVICE."""
@@ -65,13 +65,24 @@ def train_sq8(df: DataFrame, id_col: str = "vec_id",
 
     base = _l2_normalized(df, id_col, vec_col, normalize)
     dim = vec_dim(base, "v", dim)
+    # get() yields NULL past a short vector's end where v[i] would fail
+    # the job; the shortest width then names the missing dimension
     row = base.selectExpr(
         "count(1) AS n",
-        *[f"min(v[{i}]) AS lo{i}" for i in range(dim)],
-        *[f"max(v[{i}]) AS hi{i}" for i in range(dim)],
+        "min(size(v)) AS width",
+        *[f"min(get(v, {i})) AS lo{i}" for i in range(dim)],
+        *[f"max(get(v, {i})) AS hi{i}" for i in range(dim)],
     ).first()
     if row is None or row["n"] == 0:
         raise ValueError("train_sq8: empty corpus")
+    if row["width"] < dim:
+        raise ValueError(
+            f"train_sq8: dimension {row['width']} is missing: a vector in "
+            f"{vec_col!r} has only {row['width']} of {dim} dimensions")
+    for i in range(dim):
+        if row[f"lo{i}"] is None:
+            raise ValueError(
+                f"train_sq8: dimension {i} of {vec_col!r} has no values")
     mins = [float(row[f"lo{i}"]) for i in range(dim)]
     steps = [(float(row[f"hi{i}"]) - float(row[f"lo{i}"])) / 255.0
              for i in range(dim)]

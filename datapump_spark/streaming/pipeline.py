@@ -87,10 +87,10 @@ class Pipeline:
 
     # ------------------------------------------------------------ ingestion
 
-    def _typed_reader(self, sample_path: str):
-        """Infer the CKAN-style schema once from the present files, return
-        (raw streaming-compatible schema, typed projection fn)."""
-        raw = read_csv_raw(self.spark, sample_path)
+    def _typed_reader(self, raw: DataFrame):
+        """Infer the CKAN-style schema once from a raw (all-string) read of
+        the present files, return (raw streaming-compatible schema, typed
+        projection fn)."""
         from datapump_spark.sources.csv_ingest import DEFAULT_INFER_SAMPLE_ROWS
         fields = infer_ckan_fields(raw, self.date_formats,
                                    sample_rows=DEFAULT_INFER_SAMPLE_ROWS)
@@ -112,12 +112,15 @@ class Pipeline:
         """Read + type + dedupe ONE queue file (the reference's per-file
         loop, datapump.py:427-456). Returns (df, n_rows, n_dupes)."""
         raw = read_csv_raw(self.spark, str(path))
-        _, project = self._typed_reader(str(path))
+        _, project = self._typed_reader(raw)
         from datapump_spark.operators.dedupe import with_file_order
         typed = project(with_file_order(raw))
-        n_rows = typed.count()
         pk = self.job.primary_key
-        n_dupes = n_rows - typed.select(*pk).distinct().count()
+        # one job for both counts; groupBy, like distinct(), treats NULL
+        # keys as equal
+        n_rows, n_keys = typed.groupBy(*pk).count().agg(
+            F.coalesce(F.sum("count"), F.lit(0)), F.count(F.lit(1))).first()
+        n_dupes = n_rows - n_keys
         if self.job.dedupe:
             typed = dedupe_by_key(typed, pk, "__file_order", self.job.dedupe)
         return typed.drop("__file_order"), n_rows, n_dupes
@@ -238,7 +241,8 @@ class Pipeline:
         sample = self.queue_files()
         if not sample:
             raise FileNotFoundError(f"no files match {self.job.input_file}")
-        schema, project = self._typed_reader(str(sample[0]))
+        schema, project = self._typed_reader(
+            read_csv_raw(self.spark, str(sample[0])))
         reader = (
             self.spark.readStream.schema(schema)
             .option("header", True)

@@ -68,6 +68,70 @@ def test_mode_tie_ordering(spark):
     assert list(got["x"]) == [1, 3]
 
 
+def test_mode_mixed_types_matches_pandas(spark):
+    """Timestamp, bigint, double and string columns, one all-null column,
+    and 1, 2 and 3 tied modes (so the NULL padding shows); two bigint
+    columns share one value slot of the stacked plan."""
+    from datetime import datetime
+
+    t1, t2, t3 = (datetime(2021, 10, 1, h) for h in (1, 2, 3))
+    rows = [
+        (t1, 5, 7, 2.5, "b", None),
+        (t1, 5, 7, 2.5, "b", None),
+        (t2, 3, 9, 1.5, "a", None),
+        (t3, 3, 9, 1.5, "c", None),
+        (None, 1, 8, 0.5, None, None),
+        (t2, None, 8, 0.5, "a", None),
+    ]
+    cols = ["ts", "b", "b3", "d", "s", "n"]
+    ddl = ("ts timestamp, b bigint, b3 bigint, d double, s string, "
+           "n double")
+    df = spark.createDataFrame(rows, ddl)
+    expected = pd.DataFrame(rows, columns=cols).mode()
+    got_df = column_modes(df, cols)
+
+    assert [(f.name, f.dataType.simpleString())
+            for f in got_df.schema.fields] == [
+        ("stat", "bigint"), *[(c, t) for c, t in df.dtypes]]
+    got = got_df.toPandas()
+    assert list(got["stat"]) == [0, 1, 2]
+    for c in cols:
+        assert list(got[c].isna()) == list(expected[c].isna()), c
+        assert list(got[c].dropna()) == list(expected[c].dropna()), c
+
+
+def _jobs_in_group(spark, name, action):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"{name}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, name)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_mode_job_count_independent_of_column_count(spark):
+    """The stacked plan scans once for all columns: 8 columns cost the
+    same Spark jobs as 2."""
+    from datetime import datetime
+
+    rows = [(i % 3, i % 5, float(i % 4), f"s{i % 2}",
+             datetime(2021, 1, 1 + i % 6), i % 7, float(i % 3), f"t{i % 4}")
+            for i in range(40)]
+    df = spark.createDataFrame(
+        rows, "a bigint, b bigint, c double, d string, e timestamp, "
+              "f bigint, g double, h string")
+    two = _jobs_in_group(spark, "modes2",
+                         lambda: column_modes(df, df.columns[:2]).collect())
+    eight = _jobs_in_group(spark, "modes8",
+                           lambda: column_modes(df, df.columns).collect())
+    assert two == eight
+
+
 def test_edge_empty_and_all_null_inputs(spark):
     """Operators degrade gracefully on empty / all-null input (the driver
     may call any query on any SF; no operator may throw on degenerate
@@ -83,7 +147,11 @@ def test_edge_empty_and_all_null_inputs(spark):
 
     assert len(describe_numeric(empty, ["v"]).collect()) == 8   # stats rows, null values
     assert len(describe_numeric(nulls, ["v"]).collect()) == 8
-    assert len(describe_string(nulls, ["s"]).collect()) == 4
+    # pandas describe(include='all') on an all-null text column: count 0,
+    # unique 0, no top/freq
+    assert {r["stat"]: r["value"] for r in
+            describe_string(nulls, ["s"]).collect()} == {
+        "count": "0", "unique": "0", "top": None, "freq": None}
     assert column_modes(nulls, ["s", "v"]).count() == 0         # no non-null modes
     assert freq_resample(empty, ["k"], "ts", "H").count() == 0
 

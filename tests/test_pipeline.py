@@ -157,6 +157,38 @@ def test_audit_append_only(spark, env):
     assert env["sink"].read(spark, AUDIT_TABLE).where("ok").count() >= 2
 
 
+def test_one_csv_read_per_file_and_audit_counts(spark, tmp_path,
+                                                 monkeypatch):
+    """Each queue file is read once, and the audit's processed / dupes
+    counts hold on a file with NULL-PK rows (NULL keys group together,
+    as under distinct())."""
+    from datapump_spark.streaming import pipeline
+
+    calls = []
+    real = pipeline.read_csv_raw
+    monkeypatch.setattr(pipeline, "read_csv_raw",
+                        lambda spark, path: calls.append(path)
+                        or real(spark, path))
+    inbox = tmp_path / "input"
+    inbox.mkdir()
+    (inbox / "a.csv").write_text("Id,Val\n1,a\n1,b\n,x\n,y\n2,z\n")
+    (inbox / "b.csv").write_text("Id,Val\n3,c\n4,d\n")
+    job = JobSpec.from_dict({
+        "InputFile": str(inbox / "*.csv"),
+        "TargetOrg": "o", "TargetPackage": "p", "TargetResource": "r",
+        "PrimaryKey": "Id", "Dedupe": "last", "Truncate": False,
+        "Stats": [{"Kind": "mode"}],
+    })
+    sink = ParquetMergeSink(tmp_path / "lake")
+    Pipeline(spark, job, sink, tmp_path / "done",
+             tmp_path / "bad").run_available()
+    assert len(calls) == 2
+    audit = {Path(r.file).name: (r.processed, r.dupes, r.ok, r.error)
+             for r in sink.read(spark, AUDIT_TABLE).collect()}
+    assert audit == {"a.csv": (5, 2, True, None),
+                     "b.csv": (2, 0, True, None)}
+
+
 def _write_overlap_files(inbox):
     import os
     import time as _time

@@ -89,6 +89,21 @@ def test_external_queries_and_constant_dim(spark):
     assert hits[0]["score"] >= 0.999999
 
 
+def test_short_or_empty_dimension_is_named(spark):
+    """A vector shorter than ``dim``, or a dimension with no values, fails
+    with a ValueError naming the dimension, not a bare TypeError."""
+    short = spark.createDataFrame(
+        [(1, [1.0, 2.0, 3.0]), (2, [2.0, 1.0]), (3, [3.0, 2.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="dimension 2 is missing"):
+        train_sq8(short, dim=3)
+    holes = spark.createDataFrame(
+        [(1, [1.0, None]), (2, [2.0, None])],
+        "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="dimension 1 .* has no values"):
+        train_sq8(holes, normalize=False, dim=2)
+
+
 @pytest.mark.slow  # redundancy: q_sq8_topk (recall-gated bench
 # variant) runs the expr strategy per round and the no-cross-join
 # plan assertion stays in-default; GEMM-vs-expr equivalence is
