@@ -298,18 +298,10 @@ def _warm_python_workers(spark) -> None:
         from datapump_spark.operators.opus import (decode_ogg_opus,
                                                    encode_opus)
         decode_ogg_opus(encode_opus(np.zeros(160), 8000))
-        # brotli (r12): derived-table load (dictionary gunzip + LUTs)
-        from datapump_spark.operators.brotli import (decode_brotli,
-                                                     encode_brotli)
-        decode_brotli(encode_brotli(b"warm"))
         # r12 continuation: the compressed-JSONL / 7z / archive gates'
-        # decode modules (zstd already imports via avro paths)
-        from datapump_spark.operators.lz4 import (decode_lz4_frame,
-                                                  encode_lz4_frame)
-        from datapump_spark.operators import lzw, zstd  # noqa
+        # decode modules
+        from datapump_spark.operators import lzw  # noqa
         from datapump_spark.sources import cpio_iso, sevenzip  # noqa
-
-        decode_lz4_frame(encode_lz4_frame(b"warm"))
         for pdf in batches:
             yield pdf
 

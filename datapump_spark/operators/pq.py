@@ -358,13 +358,6 @@ def ivfpq_topk(
     of it, and what they read is 8 bytes/vector, the multiplicative
     combination of IVF's candidate pruning and PQ's memory pruning.
     """
-    import numpy as np
-
-    from datapump_spark.operators.similarity import (
-        _assign_cells,
-        _kmeans_centroids,
-    )
-
     spark = df.sparkSession
     base = _l2_normalized(df, id_col, vec_col)
 
@@ -376,6 +369,7 @@ def ivfpq_topk(
     # inheritable_thread_target propagates the JVM-local properties.
     # qrows' VALUES are identical either way (same frame, same collect) —
     # the trained model and result cannot change.
+    import uuid
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
@@ -383,13 +377,38 @@ def ivfpq_topk(
     qsrc = queries if queries is not None \
         else df.where(F.col(id_col) < query_max_id)
 
+    # its own job group, so a failed training can cancel it below instead
+    # of leaving an orphan job running past the raised error
+    group = f"ivfpq-queries-{uuid.uuid4().hex}"
+
     def _collect_queries():
-        spark.sparkContext.setJobDescription("ivfpq: query-side collect")
+        spark.sparkContext.setJobGroup(group, "ivfpq: query-side collect",
+                                       interruptOnCancel=True)
         return _l2_normalized(qsrc, id_col, vec_col).collect()
 
     pool = ThreadPoolExecutor(max_workers=1)
     q_future = pool.submit(inheritable_thread_target(_collect_queries))
     pool.shutdown(wait=False)
+    try:
+        return _ivfpq_search(
+            spark, base, q_future, k, n_cells, n_probe, m, kc, lloyd_iters,
+            rerank_factor, dim)
+    except BaseException:
+        spark.sparkContext.cancelJobGroup(group)
+        q_future.exception()    # wait for the cancelled collect to end
+        raise
+
+
+def _ivfpq_search(spark, base, q_future, k, n_cells, n_probe, m, kc,
+                  lloyd_iters, rerank_factor, dim) -> DataFrame:
+    """Train, encode and search for :func:`ivfpq_topk`; ``q_future``
+    yields the collected query rows."""
+    import numpy as np
+
+    from datapump_spark.operators.similarity import (
+        _assign_cells,
+        _kmeans_centroids,
+    )
 
     C = _kmeans_centroids(base.select("id", "v"), n_cells, lloyd_iters)
     if C is None:

@@ -8,7 +8,7 @@ mirrors queries.py: decimal-exact sums, round(…,6) statistics.
 
 from __future__ import annotations
 
-from datapump_spark.queries import IOT_GLOB, JSONL_GLOB, WARC_GLOB
+from datapump_spark.queries import IOT_GLOB, WARC_GLOB
 from datapump_spark.sources.csv_ingest import DUCKDB_DATE_FORMATS
 
 
@@ -1301,12 +1301,6 @@ SELECT d.doc_id,
        CAST(d.nt - COALESCE(r.n_kept, 0) AS BIGINT) AS n_removed,
        COALESCE(r.clean_text, '') AS clean_text
 FROM docs d LEFT JOIN reb r USING (doc_id)
-"""
-
-EXTRA_ORACLES["q_jsonl_scan"] = f"""
-SELECT doc_id, lang, source, n_chars, text,
-       meta.quality AS quality, meta.crawl AS crawl, tags
-FROM read_json('{JSONL_GLOB}', format='newline_delimited')
 """
 
 EXTRA_ORACLES["q_line_dedup"] = """
@@ -3627,9 +3621,9 @@ ORDER BY event_id LIMIT 20000
 """
 
 
-# q_jsonl_scan (r12, seven compressions incl. foreign libzstd /
-# liblz4 / libbrotli bytes): the fixture was built from this exact
-# slice, so re-selecting it IS the oracle.
+# q_jsonl_scan (r12, eight compressions incl. libzstd / liblz4 /
+# libbrotli bytes): the fixture was built from this exact slice, so
+# re-selecting it IS the oracle.
 EXTRA_ORACLES["q_jsonl_scan"] = """
 SELECT event_id,
        strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,

@@ -2261,24 +2261,6 @@ def q_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return equidepth_histogram(_t(spark, sf_dir, "events"), "value")
 
 
-def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSONL ingestion: schema-inferred scan of the docs fixture, nested
-    meta struct flattened to typed columns (sources/jsonl.py)."""
-    from datapump_spark.sources.jsonl import read_jsonl
-
-    d = read_jsonl(spark, JSONL_GLOB)
-    return d.select(
-        F.col("doc_id").cast("bigint").alias("doc_id"),
-        "lang",
-        "source",
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-        "text",
-        F.col("meta.quality").cast("double").alias("quality"),
-        F.col("meta.crawl").alias("crawl"),
-        "tags",
-    )
-
-
 def q_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4-style corpus-wide duplicate-line removal. The synthetic docs are
     single-line, so the query first rechunks each document into pseudo-lines
@@ -2632,7 +2614,6 @@ EXTRA_QUERIES = {
     "q_table_diff": q_table_diff,
     "q_equidepth": q_equidepth,
     "q_cube": q_cube,
-    "q_jsonl_scan": q_jsonl_scan,
     "q_line_dedup": q_line_dedup,
     "q_span_dedup": q_span_dedup,
     "q_canonical_docs": q_canonical_docs,
@@ -4449,9 +4430,9 @@ EXTRA_QUERIES["q_opus_tone"] = q_opus_tone
 
 def scaled_events_avro(sf_dir: str, n_rows: int = 20000) -> str:
     """Materialize (once) the first ``n_rows`` events as FOUR Avro
-    container files — quarters in codec null, deflate, snappy (r10)
-    and zstd (r11: the pure-Python RFC 8878 decoder) — so one scan
-    witnesses every block decoder."""
+    container files — quarters in codec null, deflate, snappy and zstd
+    (pyarrow's libsnappy / libzstd) — so one scan witnesses every
+    block decoder."""
     import os
     import shutil
 
@@ -4512,9 +4493,8 @@ def scaled_events_jsonl(sf_dir: str, n_rows: int = 21000) -> str:
     """Materialize (once) the first ``n_rows`` events as EIGHT JSONL
     part-files — eighths in plain text, gzip, bz2, xz, lzma-alone
     (stdlib reference compressors) and zstd, LZ4 frame, brotli
-    (pyarrow's bundled reference codecs — FOREIGN bytes for the three
-    pure-Python decoders) — so one scan witnesses the whole
-    compressed-corpus dispatch (sources/jsonl.py:decompress_auto)."""
+    (pyarrow's bundled reference codecs) — so one scan witnesses the
+    whole compressed-corpus dispatch (sources/jsonl.py:decompress_auto)."""
     import json
     import os
     import shutil
@@ -4570,12 +4550,12 @@ def scaled_events_jsonl(sf_dir: str, n_rows: int = 21000) -> str:
 def q_jsonl_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compressed-JSONL corpus read gate (sources/jsonl.py, round 12):
     per-file magic dispatch over plain / gzip / bz2 / xz / lzma-alone
-    / zstd / LZ4 frame / brotli — zstd, lz4 and brotli decoded by the
-    conformance-pinned pure-Python codecs FROM FOREIGN REFERENCE BYTES
-    (pyarrow's bundled libzstd / liblz4 / libbrotli compressed the
-    fixture) — Arrow-batched decode, then JVM-side from_json with an
-    explicit schema (no inference pass). Decoded rows must reproduce
-    EXACTLY the events slice the oracle re-selects."""
+    / zstd / LZ4 frame / brotli — zstd, lz4 and brotli decoded by
+    pyarrow's bundled libzstd / liblz4 / libbrotli
+    (sources/jsonl.native_decompress) — Arrow-batched decode, then
+    JVM-side from_json with an explicit schema (no inference pass).
+    Decoded rows must reproduce EXACTLY the events slice the oracle
+    re-selects."""
     from datapump_spark.sources.jsonl import read_jsonl_compressed
 
     return read_jsonl_compressed(

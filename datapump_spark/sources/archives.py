@@ -1,7 +1,7 @@
 """Archive ingestion (round 9; family completed round 12): ZIP, TAR
-(``.tar`` / ``.tar.{gz,bz2,xz}`` via stdlib, ``.tar.{zst,lz4,Z}`` via
-the pure-Python conformance-pinned decoders, ``.tar.lzma`` via
-LZMA_ALONE), 7z (sources/sevenzip.py), cpio and ISO 9660
+(``.tar`` / ``.tar.{gz,bz2,xz}`` via stdlib, ``.tar.{zst,lz4}`` via
+pyarrow's bundled libzstd / liblz4, ``.tar.Z`` via operators/lzw.py,
+``.tar.lzma`` via LZMA_ALONE), 7z (sources/sevenzip.py), cpio and ISO 9660
 (sources/cpio_iso.py).
 
 Crawl and document dumps routinely arrive as archives — a directory
@@ -123,9 +123,9 @@ def _sniff_archive(data: bytes) -> str | None:
             or data[:6] == b"\xfd7zXZ\x00":
         return "tar"                    # compressed tar (r:* sniffs)
     if data[:4] == b"\x28\xb5\x2f\xfd":
-        return "tar+zstd"               # .tar.zst (r12: pure-Python zstd)
+        return "tar+zstd"               # .tar.zst (pyarrow's libzstd)
     if data[:4] == b"\x04\x22\x4d\x18":
-        return "tar+lz4"                # .tar.lz4 (r12: pure-Python lz4)
+        return "tar+lz4"                # .tar.lz4 (pyarrow's liblz4)
     if data[:2] == b"\x1f\x9d":
         return "tar+Z"                  # .tar.Z (r12: pure-Python LZW)
     if len(data) > 262 and data[257:262] == b"ustar":
@@ -139,8 +139,8 @@ def read_archive_members(spark: SparkSession, path: str, *,
                          on_error: str = "null") -> DataFrame:
     """One row per archive MEMBER: (archive_path, member_path,
     member_bytes, member_size, mtime). ZIP, 7z (sources/sevenzip.py,
-    r12) and TAR (plain/gz/bz2/xz via stdlib; zst/lz4 via the r12
-    pure-Python conformance-pinned decoders) are sniffed per file by
+    r12) and TAR (plain/gz/bz2/xz via stdlib; zst/lz4 via pyarrow's
+    native codecs) are sniffed per file by
     magic — a directory can mix all of them.
     Oversized members (``max_member_bytes``) and, under
     ``on_error='null'``, unreadable archives yield rows with NULL
@@ -181,20 +181,14 @@ def read_archive_members(spark: SparkSession, path: str, *,
                             max_member_bytes)
                     elif kind == "tar":
                         it = _iter_tar(data, member_glob, max_member_bytes)
-                    elif kind == "tar+zstd":
-                        from datapump_spark.operators.zstd import decode_zstd
-
-                        it = _iter_tar(
-                            decode_zstd(data, max_output=_TAR_DECODE_CAP),
-                            member_glob, max_member_bytes)
-                    elif kind == "tar+lz4":
-                        from datapump_spark.operators.lz4 import (
-                            decode_lz4_frame,
+                    elif kind in ("tar+zstd", "tar+lz4"):
+                        from datapump_spark.sources.jsonl import (
+                            native_decompress,
                         )
 
                         it = _iter_tar(
-                            decode_lz4_frame(data,
-                                             max_output=_TAR_DECODE_CAP),
+                            native_decompress(data, kind[4:],
+                                              _TAR_DECODE_CAP, path_),
                             member_glob, max_member_bytes)
                     elif kind == "tar+Z":
                         from datapump_spark.operators.lzw import decode_z

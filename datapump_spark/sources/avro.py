@@ -1,4 +1,4 @@
-"""Avro object-container ingestion in pure stdlib (round 9).
+"""Avro object-container ingestion without spark-avro (round 9).
 
 Avro is the row-oriented lake/interchange format next to Parquet, and
 Spark's built-in support lives in an external package (spark-avro)
@@ -9,20 +9,20 @@ metadata map (schema JSON, codec), sync-marker-framed data blocks,
 zigzag-varint primitives, and recursive datum decoding.
 
 Scope (honest seams recorded in COVERAGE.md): codecs null,
-deflate (raw zlib), zstd (r11, pure-Python RFC 8878 decoder in
-operators/zstd.py, conformance-pinned against libzstd) and snappy
-(r10, pure-Python raw codec in
-operators/snappy.py with the spec's big-endian CRC32 of the
-uncompressed block); schemas of records over primitives, nullable
-``["null", T]`` unions, enums, fixed, arrays, maps, and NESTED
-records (nested output as Spark structs); bzip2 and xz blocks decode
+deflate (raw zlib), zstd and snappy (pyarrow's bundled libzstd /
+libsnappy through sources/jsonl.native_decompress; snappy blocks also
+check the spec's big-endian CRC32 of the uncompressed block);
+schemas of records over primitives, nullable ``["null", T]`` unions,
+enums, fixed, arrays, maps, and NESTED records (nested output as
+Spark structs); bzip2 and xz blocks decode
 through the stdlib bz2/lzma reference implementations (r11) — every
 codec the Avro 1.11 spec names is now readable. Recursive-type
 schemas raise ValueError; unknown codec names raise
 UnsupportedMediaError.
 
-Writer twin ``encode_avro`` (null/deflate/snappy/zstd) exists for fixtures and
-the q_avro_scan exact-hash gate.
+Writer twin ``encode_avro`` (every codec above; zstd and snappy through
+``pa.Codec(...).compress``) exists for fixtures and the q_avro_scan
+exact-hash gate.
 
 Reference parity note: the reference reads loose CSVs only; charter
 extension.
@@ -38,8 +38,12 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 
 from datapump_spark.operators.codecs import UnsupportedMediaError
+from datapump_spark.sources.jsonl import native_decompress
 
 _MAGIC = b"Obj\x01"
+# zstd / snappy block decompression cap (the bomb guard of the other
+# compressed sources, sources/jsonl.native_decompress)
+_BLOCK_DECODE_CAP = 1 << 30
 
 
 class _Reader:
@@ -172,20 +176,19 @@ def iter_avro_records(b: bytes):
             block = zlib.decompress(block, wbits=-15)
         elif codec == "snappy":
             # spec: raw-snappy block + 4-byte BIG-endian CRC32 of the
-            # UNCOMPRESSED data (r10, operators/snappy.py)
-            from datapump_spark.operators.snappy import snappy_decompress
+            # UNCOMPRESSED data
             if len(block) < 4:
                 raise ValueError("truncated snappy Avro block")
             crc = int.from_bytes(block[-4:], "big")
-            block = snappy_decompress(block[:-4])
+            block = native_decompress(block[:-4], "snappy",
+                                      _BLOCK_DECODE_CAP, "Avro block")
             if zlib.crc32(block) & 0xFFFFFFFF != crc:
                 raise ValueError("snappy Avro block CRC32 mismatch")
         elif codec == "zstd":
             # spec: each block is one zstd frame, no extra CRC (the
-            # frame's own checksum applies when present) — r11,
-            # operators/zstd.py, conformance-pinned vs libzstd
-            from datapump_spark.operators.zstd import decode_zstd
-            block = decode_zstd(block)
+            # frame's own checksum applies when present)
+            block = native_decompress(block, "zstd", _BLOCK_DECODE_CAP,
+                                      "Avro block")
         elif codec == "bzip2":              # r11: stdlib bz2
             import bz2
             block = bz2.decompress(block)
@@ -353,12 +356,12 @@ def encode_avro(schema: dict, records, codec: str = "null") -> bytes:
         co = zlib.compressobj(wbits=-15)
         block = co.compress(block) + co.flush()
     elif codec == "snappy":
-        from datapump_spark.operators.snappy import snappy_compress
-        block = snappy_compress(block) \
+        import pyarrow as pa
+        block = pa.Codec("snappy").compress(block, asbytes=True) \
             + (zlib.crc32(block) & 0xFFFFFFFF).to_bytes(4, "big")
     elif codec == "zstd":
-        from datapump_spark.operators.zstd import encode_zstd
-        block = encode_zstd(block)
+        import pyarrow as pa
+        block = pa.Codec("zstd").compress(block, asbytes=True)
     elif codec == "bzip2":
         import bz2
         block = bz2.compress(block)

@@ -14,15 +14,15 @@ decodes the wire layers for real and flags what it cannot decode:
   after a complete member — both happen in real crawls);
 - ``deflate`` both zlib-wrapped (the RFC meaning) and raw-DEFLATE (the
   infamous server bug — tried second);
-- ``br`` via the pure-Python RFC 7932 decoder in ``operators.brotli``,
-  conformance-pinned against pyarrow's bundled reference libbrotli;
+- ``br`` via pyarrow's bundled libbrotli (sources/jsonl.native_decompress;
+  a corrupt body is a flagged row like every other decode failure);
 - chained encodings applied in reverse header order;
 - charset from ``Content-Type`` honored when Python knows the codec
   (lenient, malformed bytes replaced), UTF-8 otherwise.
 
 Spark shape: one Arrow ``mapInPandas`` kernel over the payload binary
 column — byte-domain work (chunk framing, zlib) cannot be expressed in
-Catalyst, but zlib/brotli do the heavy lifting in C/numpy per batch and
+Catalyst, but zlib/libbrotli do the heavy lifting in C per batch and
 everything after the kernel (main-content extraction, quality gates)
 stays JVM codegen. Undecodable bodies surface as ``http_error`` rows
 for audit/quarantine instead of disappearing.
@@ -130,9 +130,10 @@ def decode_content(body: bytes, encoding: str) -> bytes:
     if enc == "deflate":
         return _inflate(body)
     if enc == "br":
-        from datapump_spark.operators.brotli import decode_brotli
+        from datapump_spark.sources.jsonl import native_decompress
 
-        return decode_brotli(body, max_output=MAX_BODY)
+        return native_decompress(body, "brotli", MAX_BODY,
+                                 "Content-Encoding br")
     raise ValueError(f"unsupported Content-Encoding {enc!r}")
 
 
@@ -202,7 +203,7 @@ def http_responses(df: DataFrame, payload_col: str = "payload",
     ``http_status, content_type, content_encoding, http_error`` and —
     fully wire-decoded — ``http_text`` (charset-lenient string) when
     ``text`` else ``http_body`` (binary). All other columns pass
-    through. Per-item work is C-level zlib / numpy-backed brotli;
+    through. Per-item work is C-level zlib / libbrotli;
     partitioning and everything downstream stay untouched."""
     import pandas as pd
 

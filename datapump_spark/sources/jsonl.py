@@ -20,6 +20,12 @@ Scale notes (the reason this module exists instead of bare
   task reading the whole file. ``write_jsonl`` therefore writes many
   part-files sized by upstream partitioning and defaults to no compression
   (parquet is the at-rest format; JSONL is the interchange format).
+- **General-purpose codecs are native and capped.** zstd, brotli, LZ4
+  frames and raw snappy decode through pyarrow's bundled reference
+  libraries in :func:`native_decompress`, the one helper the compressed
+  corpus reader, the archive walk, 7z, HTTP ``br`` bodies and Avro
+  blocks share: it never inflates past its cap and reports every codec
+  failure as an UnsupportedMediaError naming the file and the codec.
 """
 
 from __future__ import annotations
@@ -37,6 +43,7 @@ _BZ2_MAGIC = b"BZh"
 _XZ_MAGIC = b"\xfd7zXZ\x00"
 _ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
 _LZ4_MAGIC = b"\x04\x22\x4d\x18"
+_LZ4_LEGACY_MAGIC = b"\x02\x21\x4c\x18"
 
 
 def _cap_decompress(obj, payload: bytes, cap: int, label: str) -> bytes:
@@ -50,13 +57,58 @@ def _cap_decompress(obj, payload: bytes, cap: int, label: str) -> bytes:
     return out
 
 
+def native_decompress(payload: bytes, codec: str, cap: int,
+                      label: str) -> bytes:
+    """Decode one ``zstd`` / ``brotli`` / ``lz4`` (frame) / ``snappy``
+    (raw) payload with pyarrow's bundled reference codec, refusing
+    more than ``cap`` output bytes. Streams read at most ``cap + 1``
+    bytes, so a bomb never inflates past the cap; snappy sizes its
+    one-shot decode from the stream's varint length header, which the
+    same cap bounds. Every failure is an UnsupportedMediaError naming
+    ``label`` (the file) and the codec."""
+    import pyarrow as pa
+
+    from datapump_spark.operators.codecs import UnsupportedMediaError
+
+    try:
+        if codec == "snappy":
+            size = _snappy_length(payload, label)
+            if size > cap:
+                raise UnsupportedMediaError(
+                    f"{label}: snappy: output exceeds decode cap")
+            return pa.Codec("snappy").decompress(payload, size,
+                                                 asbytes=True)
+        out = pa.CompressedInputStream(pa.BufferReader(payload),
+                                       codec).read(cap + 1)
+    except (OSError, pa.ArrowException) as ex:
+        raise UnsupportedMediaError(f"{label}: {codec}: {ex}") from ex
+    if len(out) > cap:
+        raise UnsupportedMediaError(
+            f"{label}: {codec}: output exceeds decode cap")
+    return out
+
+
+def _snappy_length(payload: bytes, label: str) -> int:
+    """The uncompressed length snappy streams start with (a
+    little-endian base-128 varint of at most 5 bytes)."""
+    n = 0
+    for i, b in enumerate(payload[:5]):
+        n |= (b & 0x7F) << (7 * i)
+        if b < 0x80:
+            return n
+    from datapump_spark.operators.codecs import UnsupportedMediaError
+
+    raise UnsupportedMediaError(f"{label}: snappy: bad varint length header")
+
+
 def decompress_auto(name: str, payload: bytes,
                     max_bytes: int = 1 << 28) -> bytes:
     """Decompress one corpus file by magic (gzip multi-member, bz2, xz
-    via stdlib; zstd / LZ4 frame / brotli / Unix compress .Z via the
-    pure-Python conformance-pinned decoders), ``.br`` / ``.lzma`` by
+    via stdlib; zstd / LZ4 frame / brotli via pyarrow's native codecs,
+    :func:`native_decompress`; legacy LZ4 frames and Unix compress .Z
+    via operators/lz4.py and operators/lzw.py), ``.br`` / ``.lzma`` by
     extension, plain text passthrough. UnsupportedMediaError on
-    unrecognized binary."""
+    unrecognized binary or a stream that fails to decode."""
     from datapump_spark.operators.codecs import UnsupportedMediaError
 
     if payload[:2] == _GZIP_MAGIC:
@@ -82,21 +134,19 @@ def decompress_auto(name: str, payload: bytes,
         return _cap_decompress(lzma.LZMADecompressor(), payload,
                                max_bytes, "xz")
     if payload[:4] == _ZSTD_MAGIC:
-        from datapump_spark.operators.zstd import decode_zstd
-
-        return decode_zstd(payload, max_output=max_bytes)
+        return native_decompress(payload, "zstd", max_bytes, name)
     if payload[:4] == _LZ4_MAGIC:
-        from datapump_spark.operators.lz4 import decode_lz4_frame
+        return native_decompress(payload, "lz4", max_bytes, name)
+    if payload[:4] == _LZ4_LEGACY_MAGIC:
+        from datapump_spark.operators.lz4 import decode_lz4_legacy
 
-        return decode_lz4_frame(payload, max_output=max_bytes)
+        return decode_lz4_legacy(payload, max_output=max_bytes)
     if payload[:2] == b"\x1f\x9d":
         from datapump_spark.operators.lzw import decode_z
 
         return decode_z(payload, max_output=max_bytes)
     if name.endswith(".br"):
-        from datapump_spark.operators.brotli import decode_brotli
-
-        return decode_brotli(payload, max_output=max_bytes)
+        return native_decompress(payload, "brotli", max_bytes, name)
     if name.endswith(".lzma"):
         import lzma
 
@@ -231,14 +281,16 @@ def quarantine_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Good rows drop the corrupt column; quarantined rows keep only the raw
     line, mirroring the file-level quarantine dir of the ingest pipeline
-    (streaming/pipeline.py). Spark requires a cache barrier to materialize
-    ``_corrupt_record`` before referencing it in a filter — done here so
-    callers can't hit the AnalysisException.
+    (streaming/pipeline.py). Spark refuses a filter that references only
+    ``_corrupt_record`` of a raw scan, so the scan is materialized first
+    — done here so callers can't hit the AnalysisException. The barrier
+    is an eager local checkpoint, not a cache: a cache is only a hint, and
+    once released (``cachescope.release_scope``) the split would plan
+    against the raw scan again and fail.
     """
     if CORRUPT_COL not in df.columns:
         raise ValueError(f"scan was not read with keep_corrupt=True: {df.columns}")
-    from datapump_spark.cachescope import scoped_persist
-    df = scoped_persist(df)
+    df = df.localCheckpoint(eager=True)
     good = df.where(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     bad = df.where(F.col(CORRUPT_COL).isNotNull()).select(CORRUPT_COL)
     return good, bad

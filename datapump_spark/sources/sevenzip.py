@@ -9,8 +9,8 @@ EncodedHeader), describing pack streams, folders (coder chains),
 substreams (solid blocks hold many files) and file metadata.
 
 Codecs: Copy, LZMA1, LZMA2, Delta (stdlib ``lzma`` raw filters —
-real liblzma), Deflate (zlib), BZip2 (bz2), Zstandard (the
-conformance-pinned pure-Python decoder, operators/zstd.py — the
+real liblzma), Deflate (zlib), BZip2 (bz2), Zstandard (pyarrow's
+bundled libzstd through sources/jsonl.native_decompress — the
 04F71101 method id libarchive and 7-Zip-zstd emit). Multi-coder
 branch graphs, BCJ executable filters, PPMd and AES-encrypted
 entries are refused honestly (UnsupportedMediaError) — text-corpus
@@ -225,9 +225,9 @@ def _decode_coder(coder: _Coder, data: bytes, out_size: int) -> bytes:
 
         out = bz2.BZ2Decompressor().decompress(data, out_size)
     elif m == b"\x04\xf7\x11\x01":  # Zstandard (libarchive / 7-Zip-zstd)
-        from datapump_spark.operators.zstd import decode_zstd
+        from datapump_spark.sources.jsonl import native_decompress
 
-        out = decode_zstd(data, max_output=out_size)
+        out = native_decompress(data, "zstd", out_size, "7z")
     elif m == b"\x03":  # Delta filter (only in chains; handled there)
         dist = (coder.props[0] + 1) if coder.props else 1
         buf = bytearray(data)

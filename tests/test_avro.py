@@ -1,7 +1,7 @@
 """Avro object-container gates (sources/avro.py, round 9): zigzag
-varints, sync framing, both codecs, the full schema surface (unions,
-arrays, maps, enums, fixed, nested records), typed Spark read, honest
-seams."""
+varints, sync framing, every codec (zstd blocks in test_zstd.py), the
+full schema surface (unions, arrays, maps, enums, fixed, nested
+records), typed Spark read, honest seams."""
 
 from __future__ import annotations
 
@@ -95,13 +95,32 @@ def test_parse_avro_header_schema_only():
 
 
 def test_snappy_codec_round_trip_and_crc():
-    """r10: avro.codec snappy via the pure-Python raw codec — round
-    trip both directions, CRC32 verified, corruption caught."""
+    """avro.codec snappy through libsnappy — round trip, a hand-framed
+    libsnappy block decodes, the CRC32 of the uncompressed block is
+    verified, and corruption is caught."""
     import zlib
+
+    import pyarrow as pa
+
+    from datapump_spark.sources.avro import _zigzag, parse_avro_header
 
     b = encode_avro(SCHEMA, RECS, "snappy")
     assert b"snappy" in b
     assert [r for _, r in iter_avro_records(b)] == RECS
+    # re-frame a null container's block: libsnappy body + big-endian CRC
+    _, _, r, sync = parse_avro_header(encode_avro(SCHEMA, RECS, "null"))
+    n = r.long()
+    raw = r.raw(r.long())
+    hdr = b[:b.index(bytes(range(16))) + 16]
+    comp = pa.Codec("snappy").compress(raw, asbytes=True)
+
+    def framed(body):
+        return hdr + _zigzag(n) + _zigzag(len(body)) + body + sync
+
+    crc = (zlib.crc32(raw) & 0xFFFFFFFF).to_bytes(4, "big")
+    assert [rec for _, rec in iter_avro_records(framed(comp + crc))] == RECS
+    with pytest.raises(ValueError, match="CRC32"):
+        list(iter_avro_records(framed(comp + bytes(4))))
     # corrupt one compressed byte after the header: CRC or framing
     bad = bytearray(b)
     at = bad.index(bytes(range(16))) + 16 + 4   # into the block body

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from datapump_spark.cachescope import release_scope
 from datapump_spark.queries import JSONL_GLOB
 from datapump_spark.sources.jsonl import (
     CORRUPT_COL,
@@ -39,6 +40,10 @@ def test_quarantine_split(spark, tmp_path):
     scan = read_jsonl(spark, str(p), schema="doc_id bigint, text string",
                       keep_corrupt=True)
     good, bad = quarantine_split(scan)
+    # the split must survive a query-boundary cache release (a cache
+    # barrier would not: the counts below would re-plan the raw scan)
+    release_scope(spark)
+    assert (good.count(), bad.count()) == (2, 2)
     assert sorted(r.doc_id for r in good.collect()) == [1, 2]
     quarantined = [r[CORRUPT_COL] for r in bad.collect()]
     assert sorted(quarantined) == ["this is not json",
@@ -162,3 +167,15 @@ def test_decompress_auto_bomb_guards():
             # UnsupportedMediaError and BrotliError both subclass it
             decompress_auto(name, payload, max_bytes=4096)
         assert decompress_auto(name, payload) == big
+
+
+def test_decompress_auto_truncated_zstd_names_file_and_codec():
+    import pyarrow as pa
+
+    from datapump_spark.operators.codecs import UnsupportedMediaError
+    from datapump_spark.sources.jsonl import decompress_auto
+
+    z = pa.Codec("zstd").compress(b'{"doc_id": 1}\n' * 2000, asbytes=True)
+    with pytest.raises(UnsupportedMediaError,
+                       match=r"part0\.jsonl\.zst: zstd: .*[Tt]runcated"):
+        decompress_auto("part0.jsonl.zst", z[:len(z) // 2])

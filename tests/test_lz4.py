@@ -1,14 +1,13 @@
-"""LZ4 codec gates (operators/lz4.py, r12).
+"""LZ4 decode gates. Modern LZ4 frames (``0x184D2204``) decode through
+pyarrow's bundled liblz4 (sources/jsonl.native_decompress); legacy
+frames (``0x184C2102``, ``lz4 -l``), which liblz4's frame API rejects,
+decode through operators/lz4.py's block decoder.
 
-CONFORMANCE-PINNED against pyarrow's bundled reference liblz4 (the
-zstd/snappy/brotli doctrine), BOTH directions and BOTH formats:
-foreign liblz4 block (``lz4_raw``) and frame (``lz4``) output decode
-byte-exactly; liblz4 decodes this module's block and frame output
-byte-exactly (the encoder honors the spec's end-of-block rules). Plus
-the frame features liblz4's default path doesn't emit — linked
-blocks, block checksums, skippable frames, stored blocks — on
-hand-authored frames that liblz4 must also accept, and the honest
-refusals (legacy frames, dictionaries, checksum mismatches, bombs).
+Every input here is liblz4 output (``lz4_raw`` blocks, ``lz4`` frames,
+the ``lz4`` CLI) or a hand-authored frame exercising features liblz4's
+default path doesn't emit — linked blocks, block checksums, stored
+blocks, content checksums. The frame header checksum bytes (and the
+XXH32 checksums) those frames carry are precomputed constants.
 """
 
 from __future__ import annotations
@@ -21,13 +20,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from datapump_spark.operators.codecs import UnsupportedMediaError
-from datapump_spark.operators.lz4 import (
-    decode_lz4_block,
-    decode_lz4_frame,
-    encode_lz4_block,
-    encode_lz4_frame,
-    xxh32,
-)
+from datapump_spark.operators.lz4 import decode_lz4_block, decode_lz4_legacy
+from datapump_spark.sources.jsonl import decompress_auto, native_decompress
 
 _RAW = pa.Codec("lz4_raw")
 _FRAME = pa.Codec("lz4")
@@ -47,57 +41,55 @@ def _corpora() -> list[bytes]:
     ]
 
 
-# ---------------------------------------------------------------------------
-# XXH32 primitive
-# ---------------------------------------------------------------------------
-
-
-def test_xxh32_vectors():
-    # published reference vectors (xxHash repository)
-    assert xxh32(b"") == 0x02CC5D05
-    assert xxh32(b"a") == 0x550D7456
-    assert xxh32(b"Hello World") == 0xB1FD16EE
-    assert xxh32(b"abc", seed=1) == 0xAA3DA8FF
+def _legacy(data: bytes) -> bytes:
+    """A legacy frame of ``data``: liblz4 blocks of at most 8 MiB, each
+    behind its u32 compressed size."""
+    out = bytearray((0x184C2102).to_bytes(4, "little"))
+    for pos in range(0, max(len(data), 1), 8 << 20):
+        blk = _RAW.compress(data[pos:pos + (8 << 20)], asbytes=True)
+        out += len(blk).to_bytes(4, "little") + blk
+    return bytes(out)
 
 
 # ---------------------------------------------------------------------------
-# Conformance, both directions, both formats
+# Conformance: liblz4 output through both decode paths
 # ---------------------------------------------------------------------------
 
 
 @pytest.mark.parametrize("idx", range(8))
 def test_block_conformance_both_directions(idx):
+    """liblz4 blocks decode byte-exactly, and the output cap holds in
+    the other direction: one byte short of the plaintext is refused."""
     data = _corpora()[idx]
     foreign = _RAW.compress(data, asbytes=True)
     assert decode_lz4_block(foreign) == data
-    ours = encode_lz4_block(data)
-    assert _RAW.decompress(ours, len(data), asbytes=True) == data
-    assert decode_lz4_block(ours) == data
+    if data:
+        with pytest.raises(UnsupportedMediaError, match="cap"):
+            decode_lz4_block(foreign, max_output=len(data) - 1)
 
 
 @pytest.mark.parametrize("idx", range(8))
 def test_frame_conformance_both_directions(idx):
+    """The same liblz4 output decodes byte-exactly in both frame
+    formats through the corpus dispatch: a modern frame (pyarrow) and
+    a legacy frame of liblz4 blocks (operators/lz4.py)."""
     data = _corpora()[idx]
-    foreign = _FRAME.compress(data, asbytes=True)
-    assert decode_lz4_frame(foreign) == data
-    ours = encode_lz4_frame(data)
-    assert _FRAME.decompress(ours, len(data), asbytes=True) == data
-    assert decode_lz4_frame(ours) == data
+    assert decompress_auto("f.lz4", _FRAME.compress(data,
+                                                    asbytes=True)) == data
+    assert decompress_auto("l.lz4", _legacy(data)) == data
 
 
 @settings(max_examples=40, deadline=None)
 @given(st.binary(max_size=3000),
        st.sampled_from([b"", b"lz4lz4", b"\x00\x01\x02\x03" * 64]))
 def test_property_round_trip_vs_reference(data, salt):
-    """Hypothesis sweep: our encode must be accepted byte-exactly by
-    liblz4 AND our decode must accept liblz4 output (block + frame)."""
+    """Hypothesis sweep: liblz4 block, frame and legacy-framed output
+    all decode byte-exactly."""
     blob = salt + data + salt
     assert decode_lz4_block(_RAW.compress(blob, asbytes=True)) == blob
-    assert _RAW.decompress(encode_lz4_block(blob), len(blob),
-                           asbytes=True) == blob
-    assert decode_lz4_frame(_FRAME.compress(blob, asbytes=True)) == blob
-    assert _FRAME.decompress(encode_lz4_frame(blob), len(blob),
-                             asbytes=True) == blob
+    assert decompress_auto("p.lz4", _FRAME.compress(blob,
+                                                    asbytes=True)) == blob
+    assert decompress_auto("p.lz4", _legacy(blob)) == blob
 
 
 # ---------------------------------------------------------------------------
@@ -105,72 +97,67 @@ def test_property_round_trip_vs_reference(data, salt):
 # ---------------------------------------------------------------------------
 
 
-def _manual_frame(flg: int, blocks: list[bytes | tuple[bytes, bool]],
-                  content: bytes | None = None,
-                  block_checksums: bool = False) -> bytes:
-    """Hand-author a frame: blocks are (data, stored?) pairs."""
-    bd = 0x40  # 64 KB max block size
-    desc = bytes([flg, bd])
-    out = bytearray((0x184D2204).to_bytes(4, "little"))
-    out += desc
-    out.append((xxh32(desc) >> 8) & 0xFF)
-    for blk in blocks:
-        data, stored = blk if isinstance(blk, tuple) else (blk, False)
-        size = len(data) | (0x80000000 if stored else 0)
-        out += size.to_bytes(4, "little")
-        out += data
-        if block_checksums:
-            out += xxh32(data).to_bytes(4, "little")
-    out += (0).to_bytes(4, "little")
-    if content is not None:
-        out += xxh32(content).to_bytes(4, "little")
-    return bytes(out)
+def _manual_frame(flg: int, hc: int, blocks: list[bytes],
+                  tail: bytes = b"") -> bytes:
+    """Hand-author a frame (64 KB max block size): ``hc`` is the header
+    checksum byte of (``flg``, 0x40); each entry of ``blocks`` is the
+    complete block field (size word, data, optional checksum); ``tail``
+    is the optional content checksum."""
+    return ((0x184D2204).to_bytes(4, "little") + bytes([flg, 0x40, hc])
+            + b"".join(blocks) + (0).to_bytes(4, "little") + tail)
+
+
+def _block(data: bytes, stored: bool = False) -> bytes:
+    return (len(data) | (0x80000000 if stored else 0)).to_bytes(
+        4, "little") + data
 
 
 def test_linked_blocks_cross_block_match():
     """B.Indep=0: block 2's match offsets reach into block 1's
-    plaintext. liblz4 must agree with our decode."""
+    plaintext."""
     plain1 = b"abcdefgh" * 10  # 80 bytes
-    blk1 = encode_lz4_block(plain1)
+    blk1 = _RAW.compress(plain1, asbytes=True)
     # block 2: zero literals then match len 20 at offset 80 (entirely
     # in block 1's history), then a 12-literal end sequence (the spec's
     # end-of-block margins, which liblz4's safe decoder enforces)
     tail = b"0123456789AB"
     blk2 = bytes([0x0F, 80, 0, 1, 0xC0]) + tail
     expect = plain1 + plain1[:20] + tail
-    frame = _manual_frame(0x40, [blk1, blk2])  # v01, linked, no extras
-    assert decode_lz4_frame(frame) == expect
-    assert _FRAME.decompress(frame, len(expect), asbytes=True) == expect
+    frame = _manual_frame(0x40, 0xC0, [_block(blk1), _block(blk2)])
+    assert decompress_auto("linked.lz4", frame) == expect
 
 
 def test_block_checksums_and_stored_blocks():
     plain = b"stored block payload " * 50
-    frame = _manual_frame(0x50, [(plain, True)], block_checksums=True)
-    assert decode_lz4_frame(frame) == plain
-    assert _FRAME.decompress(frame, len(plain), asbytes=True) == plain
-    # corrupt the block checksum (trails the block payload) -> refusal
-    bad = (frame[:7 + 4 + len(plain)] + b"\xde\xad\xbe\xef"
-           + frame[7 + 4 + len(plain) + 4:])
-    with pytest.raises(UnsupportedMediaError, match="block checksum"):
-        decode_lz4_frame(bad)
+    checksum = (0xAE3D9930).to_bytes(4, "little")     # XXH32(plain)
+    frame = _manual_frame(0x50, 0xC0,
+                          [_block(plain, stored=True) + checksum])
+    assert decompress_auto("stored.lz4", frame) == plain
+    bad = _manual_frame(0x50, 0xC0,
+                        [_block(plain, stored=True) + b"\xde\xad\xbe\xef"])
+    with pytest.raises(UnsupportedMediaError, match="stored.lz4: lz4"):
+        decompress_auto("stored.lz4", bad)
 
 
 def test_content_checksum_and_mismatch():
     plain = b"content-checksummed" * 30
-    blk = encode_lz4_block(plain)
-    frame = _manual_frame(0x44, [blk], content=plain)
-    assert decode_lz4_frame(frame) == plain
-    bad = frame[:-4] + b"\x00\x00\x00\x00"
-    with pytest.raises(UnsupportedMediaError, match="content checksum"):
-        decode_lz4_frame(bad)
+    blk = _block(_RAW.compress(plain, asbytes=True))
+    checksum = (0x6F2C79D0).to_bytes(4, "little")     # XXH32(plain)
+    frame = _manual_frame(0x44, 0x5E, [blk], tail=checksum)
+    assert decompress_auto("cc.lz4", frame) == plain
+    bad = _manual_frame(0x44, 0x5E, [blk], tail=b"\x00\x00\x00\x00")
+    with pytest.raises(UnsupportedMediaError, match="cc.lz4: lz4"):
+        decompress_auto("cc.lz4", bad)
 
 
 def test_skippable_frame_and_concatenation():
     a, b = b"first frame " * 20, b"second frame " * 20
     skip = (0x184D2A5F).to_bytes(4, "little") + (6).to_bytes(
         4, "little") + b"IGNORE"
-    blob = encode_lz4_frame(a) + skip + encode_lz4_frame(b)
-    assert decode_lz4_frame(blob) == a + b
+    blob = (_FRAME.compress(a, asbytes=True) + skip
+            + _FRAME.compress(b, asbytes=True))
+    assert decompress_auto("s.lz4", blob) == a + b
+    assert decompress_auto("s.lz4", _legacy(a) + _legacy(b)) == a + b
 
 
 _LZ4_CLI = __import__("shutil").which("lz4")
@@ -179,7 +166,8 @@ _LZ4_CLI = __import__("shutil").which("lz4")
 @pytest.mark.skipif(_LZ4_CLI is None, reason="lz4 CLI not present")
 def test_legacy_frame_conformance(tmp_path):
     """``lz4 -l`` (legacy frame, the old-kernel format) — foreign CLI
-    bytes decode byte-exactly, including multi-block (>8 MiB) inputs."""
+    bytes decode byte-exactly through the corpus dispatch, including
+    multi-block (>8 MiB) inputs."""
     import subprocess
 
     payload = (b"legacy frame payload " * 500000)[:9 << 20]  # 2 blocks
@@ -189,36 +177,43 @@ def test_legacy_frame_conformance(tmp_path):
     subprocess.run([_LZ4_CLI, "-q", "-l", str(src), str(out)], check=True)
     data = out.read_bytes()
     assert data[:4] == (0x184C2102).to_bytes(4, "little")
-    assert decode_lz4_frame(data) == payload
+    assert decompress_auto("p.lz4", data) == payload
 
 
 def test_refusals():
-    with pytest.raises(UnsupportedMediaError, match="magic"):
-        decode_lz4_frame(b"NOTLZ4XX")
-    # dictionary flag set
-    desc = bytes([0x41, 0x40, 0x2A, 0x00, 0x00, 0x00])
-    frame = ((0x184D2204).to_bytes(4, "little") + desc
-             + bytes([(xxh32(desc) >> 8) & 0xFF]))
-    with pytest.raises(UnsupportedMediaError, match="dictionar"):
-        decode_lz4_frame(frame)
+    with pytest.raises(UnsupportedMediaError, match="x.lz4: lz4"):
+        native_decompress(b"NOTLZ4XX", "lz4", 1 << 20, "x.lz4")
+    with pytest.raises(UnsupportedMediaError, match="not a legacy frame"):
+        decode_lz4_legacy(b"NOTLZ4XX")
+    # dictionary flag set (DictID 42)
+    frame = ((0x184D2204).to_bytes(4, "little")
+             + bytes([0x41, 0x40, 0x2A, 0x00, 0x00, 0x00, 0xE6]))
+    with pytest.raises(UnsupportedMediaError, match="d.lz4: lz4"):
+        decompress_auto("d.lz4", frame)
     # corrupted header checksum
-    good = encode_lz4_frame(b"x" * 100)
-    bad = good[:14] + bytes([good[14] ^ 0xFF]) + good[15:]
-    with pytest.raises(UnsupportedMediaError, match="header checksum"):
-        decode_lz4_frame(bad)
-    # content size mismatch
-    good = bytearray(encode_lz4_frame(b"y" * 100))
-    good[6:14] = (99).to_bytes(8, "little")
-    desc = bytes(good[4:14])
-    good[14] = (xxh32(desc) >> 8) & 0xFF
-    with pytest.raises(UnsupportedMediaError, match="content size"):
-        decode_lz4_frame(bytes(good))
+    good = _FRAME.compress(b"x" * 100, asbytes=True)
+    bad = good[:6] + bytes([good[6] ^ 0xFF]) + good[7:]
+    with pytest.raises(UnsupportedMediaError, match="h.lz4: lz4"):
+        decompress_auto("h.lz4", bad)
+    # declared content size 99 for 100 bytes of content
+    blk = _block(_RAW.compress(b"y" * 100, asbytes=True))
+    frame = ((0x184D2204).to_bytes(4, "little")
+             + bytes([0x68, 0x40]) + (99).to_bytes(8, "little")
+             + bytes([0x38]) + blk + (0).to_bytes(4, "little"))
+    with pytest.raises(UnsupportedMediaError, match="n.lz4: lz4"):
+        decompress_auto("n.lz4", frame)
+    # legacy: a block size past the end of the data
+    with pytest.raises(UnsupportedMediaError, match="legacy block size"):
+        decode_lz4_legacy(_legacy(b"z" * 1000)[:-3])
 
 
 def test_decode_cap_bomb_guard():
-    bomb = encode_lz4_frame(b"\x00" * 500000)
+    zeros = b"\x00" * 500000
     with pytest.raises(UnsupportedMediaError, match="cap"):
-        decode_lz4_frame(bomb, max_output=10000)
+        native_decompress(_FRAME.compress(zeros, asbytes=True), "lz4",
+                          10000, "bomb.lz4")
     with pytest.raises(UnsupportedMediaError, match="cap"):
-        decode_lz4_block(_RAW.compress(b"\x00" * 500000, asbytes=True),
+        decode_lz4_block(_RAW.compress(zeros, asbytes=True),
                          max_output=10000)
+    with pytest.raises(UnsupportedMediaError, match="cap"):
+        decode_lz4_legacy(_legacy(zeros), max_output=10000)

@@ -233,3 +233,39 @@ def test_ivfpq_external_queries(emb, spark):
     got = {r["query_id"]: r["neighbor_id"] for r in hits}
     assert got == {-3: 3, -17: 17}
     assert all(r["score"] >= 0.999999 for r in hits)
+
+
+def test_ivfpq_failed_training_cancels_query_collect(emb, spark,
+                                                     monkeypatch):
+    """ivfpq_topk submits the query-side collect before training; when
+    training raises, that job is cancelled before the error propagates
+    instead of running on as an orphan."""
+    import time
+
+    from datapump_spark.operators import pq, similarity
+
+    st = spark.sparkContext.statusTracker()
+
+    @F.udf("array<double>")
+    def slow(v):
+        time.sleep(20)
+        return v
+
+    probe = emb.where(F.col("vec_id") < 2).select(
+        (-F.col("vec_id")).alias("vec_id"),
+        slow("embedding").alias("embedding"))
+    query_jobs = []
+
+    def failing_kmeans(*args, **kwargs):
+        deadline = time.monotonic() + 60
+        while not st.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        query_jobs.extend(st.getActiveJobsIds())
+        raise RuntimeError("training failed")
+
+    monkeypatch.setattr(similarity, "_kmeans_centroids", failing_kmeans)
+    with pytest.raises(RuntimeError, match="training failed"):
+        pq.ivfpq_topk(emb, k=1, n_cells=4, queries=probe)
+    assert query_jobs
+    assert [j for j in query_jobs
+            if st.getJobInfo(j).status == "RUNNING"] == []

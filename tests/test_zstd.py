@@ -1,24 +1,30 @@
-"""Zstandard decoder gates (operators/zstd.py, r11 — RFC 8878).
+"""Zstandard decode gates: ``.zst`` corpus files, ``.tar.zst`` shards,
+7z method 04F71101 and Avro zstd blocks all decode through pyarrow's
+bundled libzstd (sources/jsonl.native_decompress).
 
-Unlike the MP3/VP8/arith-JPEG stand-ins, zstd has a REFERENCE
-implementation in-container (pyarrow bundles libzstd), so the decoder
-is conformance-pinned against genuinely foreign bytes: libzstd output
-at several levels over several data shapes, exercising Huffman
-literals (direct + FSE weights, 1 + 4 streams), FSE-coded / repeat
-sequence tables, repeat offsets and multi-block frames — none of it
-produced by our twin. The raw-block writer twin is pinned the other
-way: libzstd must read our frames byte-exactly.
+The gates pin what the swap must keep: byte-exact decode of libzstd
+output over several levels and data shapes, multi-frame and skippable
+input, checksum and content-size enforcement, the decode cap, and the
+error contract — every libzstd failure (truncation, corruption, a frame
+that needs a dictionary) is an UnsupportedMediaError naming the file and
+the codec.
 """
 
 from __future__ import annotations
 
 import random
-import zlib
 
 import pytest
 
 from datapump_spark.operators.codecs import UnsupportedMediaError
-from datapump_spark.operators.zstd import decode_zstd, encode_zstd, xxh64
+from datapump_spark.sources.jsonl import decompress_auto, native_decompress
+
+# ``zstd --check`` of b"checksummed payload " * 50: single-segment frame
+# with a 2-byte frame content size (offsets 5-6) and an XXH64 checksum
+# (the last 4 bytes) — pyarrow's compressor writes no checksum
+_CHECKED_FRAME = bytes.fromhex(
+    "28b52ffd64e802dd0000a0636865636b73756d6d6564207061796c6f61642001"
+    "00a25f3599332301e6")
 
 
 def _lib(level: int = 3):
@@ -42,67 +48,59 @@ def _datasets() -> dict[str, bytes]:
 
 
 def test_conformance_decode_libzstd_output():
-    """Foreign bytes: libzstd-compressed corpora at fast/default/max
-    levels must decode byte-exactly."""
+    """libzstd-compressed corpora at fast/default/max levels decode
+    byte-exactly through the corpus dispatch."""
     for level in (1, 3, 19):
         codec = _lib(level)
         for name, d in _datasets().items():
             comp = codec.compress(d, asbytes=True)
-            assert decode_zstd(comp) == d, (level, name)
-
-
-def test_conformance_libzstd_reads_our_frames():
-    """Mutual pin: the raw-block twin's frames (FCS + checksum) are
-    valid input to the reference decoder."""
-    codec = _lib()
-    for d in (b"", b"x", b"mutual " * 5000, bytes(range(256)) * 300):
-        fr = encode_zstd(d)
-        assert codec.decompress(fr, len(d), asbytes=True) == d
-        assert decode_zstd(fr) == d              # and to ourselves
+            assert decompress_auto(f"{name}.zst", comp) == d, (level, name)
 
 
 def test_twin_checksum_and_fcs_enforced():
+    """The frame's XXH64 content checksum and its frame content size
+    are both checked: corrupting either is refused, never returned."""
     d = b"checksummed payload " * 50
-    fr = bytearray(encode_zstd(d))
-    fr[-1] ^= 0xFF                               # corrupt xxh64 word
-    with pytest.raises(ValueError, match="checksum"):
-        decode_zstd(bytes(fr))
-    assert decode_zstd(bytes(fr), verify_checksum=False) == d
-    fr2 = bytearray(encode_zstd(b"abcdef" * 50))
-    # frame content size byte (single-segment, 2-byte FCS at offset 5)
-    fr2[5] ^= 0x01
-    with pytest.raises(ValueError, match="content size"):
-        decode_zstd(bytes(fr2))
+    assert decompress_auto("c.zst", _CHECKED_FRAME) == d
+    bad = bytearray(_CHECKED_FRAME)
+    bad[-1] ^= 0xFF
+    with pytest.raises(UnsupportedMediaError, match="checksum"):
+        decompress_auto("c.zst", bytes(bad))
+    bad = bytearray(_CHECKED_FRAME)
+    bad[5] ^= 0x01
+    with pytest.raises(UnsupportedMediaError, match="c.zst: zstd"):
+        decompress_auto("c.zst", bytes(bad))
 
 
 def test_multi_frame_and_skippable():
     d1, d2 = b"frame one " * 30, b"frame two " * 30
     skippable = (0x184D2A53).to_bytes(4, "little") \
         + (7).to_bytes(4, "little") + b"7 bytes"
-    blob = encode_zstd(d1) + skippable + encode_zstd(d2)
-    assert decode_zstd(blob) == d1 + d2
     lib = _lib()
-    blob2 = lib.compress(d1, asbytes=True) + lib.compress(d2, asbytes=True)
-    assert decode_zstd(blob2) == d1 + d2
+    f1, f2 = lib.compress(d1, asbytes=True), lib.compress(d2, asbytes=True)
+    assert decompress_auto("m.zst", f1 + f2) == d1 + d2
+    assert decompress_auto("m.zst", f1 + skippable + f2) == d1 + d2
 
 
 def test_honest_seams():
-    with pytest.raises(ValueError, match="magic"):
-        decode_zstd(b"\x00\x01\x02\x03rest")
-    with pytest.raises(ValueError, match="truncated"):
-        decode_zstd(encode_zstd(b"abc" * 100)[:20])
-    # nonzero dictionary id refuses honestly: frame header with
-    # did_code=1, single-segment, FCS code 0 -> 1-byte FCS
+    with pytest.raises(UnsupportedMediaError, match="x.bin: zstd"):
+        native_decompress(b"\x00\x01\x02\x03rest", "zstd", 1 << 20,
+                          "x.bin")
+    whole = _lib().compress(b"abc" * 100, asbytes=True)
+    with pytest.raises(UnsupportedMediaError, match="t.zst: zstd"):
+        decompress_auto("t.zst", whole[:12])
+    # nonzero dictionary id: frame header with did_code=1,
+    # single-segment, FCS code 0 -> 1-byte FCS
     fr = ((0xFD2FB528).to_bytes(4, "little")
           + bytes([(1 << 5) | 1, 42, 0])          # FHD, DID=42, FCS=0
           + (1).to_bytes(3, "little"))            # empty last raw block
-    with pytest.raises(UnsupportedMediaError, match="dictionary"):
-        decode_zstd(fr)
+    with pytest.raises(UnsupportedMediaError, match="d.zst: zstd"):
+        decompress_auto("d.zst", fr)
     # reserved block type 3
     fr = ((0xFD2FB528).to_bytes(4, "little") + bytes([1 << 5, 0])
           + (0b111).to_bytes(3, "little"))
-    with pytest.raises(ValueError, match="reserved block"):
-        decode_zstd(fr)
+    with pytest.raises(UnsupportedMediaError, match="r.zst: zstd"):
+        decompress_auto("r.zst", fr)
 
 
 def test_rle_block_and_long_matches():
@@ -111,14 +109,16 @@ def test_rle_block_and_long_matches():
     payload (long matches / repeat offsets)."""
     lib = _lib()
     ones = b"\x55" * 70000
-    assert decode_zstd(lib.compress(ones, asbytes=True)) == ones
+    assert decompress_auto("o.zst", lib.compress(ones, asbytes=True)) == ones
     period = (b"0123456789abcdef" * 64 + b"#") * 40
-    assert decode_zstd(lib.compress(period, asbytes=True)) == period
+    assert decompress_auto("p.zst",
+                           lib.compress(period, asbytes=True)) == period
 
 
 def test_fuzz_round_trip_vs_libzstd():
-    """128 random structured buffers x random levels — every one must
-    decode byte-exactly (foreign-bytes fuzz, deterministic seed)."""
+    """128 random structured buffers x random levels: each decodes
+    byte-exactly with the cap at its exact size, and is refused with
+    the cap one byte short (deterministic seed)."""
     rng = random.Random(8878)
     words = [bytes(rng.getrandbits(8) for _ in range(rng.randint(1, 9)))
              for _ in range(40)]
@@ -127,52 +127,44 @@ def test_fuzz_round_trip_vs_libzstd():
         d = b"".join(rng.choice(words) for _ in range(n))
         level = rng.choice((1, 3, 7, 12))
         comp = _lib(level).compress(d, asbytes=True)
-        assert decode_zstd(comp) == d, trial
+        assert native_decompress(comp, "zstd", len(d), "f") == d, trial
+        if d:
+            with pytest.raises(UnsupportedMediaError, match="cap"):
+                native_decompress(comp, "zstd", len(d) - 1, "f")
 
 
-def test_xxh64_conformance(spark):
-    """xxh64 pinned against Spark's JVM XxHash64 (seed 42 — the
-    catalyst default) over varied lengths, plus the published
-    zero-length seed-0 vector."""
-    bufs = [b"", b"a", b"abc", b"0123456789abcdef",
-            b"x" * 31, b"y" * 32, b"z" * 33, b"w" * 1000,
-            bytes(range(256))]
-    rows = [(i, b) for i, b in enumerate(bufs)]
-    df = spark.createDataFrame(rows, "i int, b binary")
-    got = {r["i"]: r["h"] for r in df.selectExpr(
-        "i", "xxhash64(b) AS h").collect()}
-    for i, b in rows:
-        mine = xxh64(b, seed=42)
-        jvm = got[i] & ((1 << 64) - 1)            # JVM long -> u64
-        assert mine == jvm, (i, hex(mine), hex(jvm))
-    assert xxh64(b"") == 0xEF46DB3751D8E999
+def _avro_schema():
+    return {"type": "record", "name": "R", "fields": [
+        {"name": "k", "type": "long"}, {"name": "s", "type": "string"}]}
+
+
+def _raw_block(null_file: bytes) -> tuple[int, bytes, bytes]:
+    """(record count, uncompressed block, sync) of a one-block
+    codec-null container."""
+    from datapump_spark.sources.avro import parse_avro_header
+    _, _, r, sync = parse_avro_header(null_file)
+    n = r.long()
+    return n, r.raw(r.long()), sync
+
+
+def _reframe(b: bytes, n: int, comp: bytes, sync: bytes) -> bytes:
+    """``b``'s header (deterministic sync) around one block ``comp``."""
+    from datapump_spark.sources.avro import _zigzag
+    header_end = b.index(bytes(range(16))) + 16
+    return b[:header_end] + _zigzag(n) + _zigzag(len(comp)) + comp + sync
 
 
 def test_avro_zstd_codec_round_trip():
-    """Avro container with avro.codec=zstd: our writer twin's blocks
-    decode; a container whose block libzstd compressed (foreign
-    bytes inside the Avro framing) decodes too."""
-    from datapump_spark.sources.avro import (_MAGIC, _zigzag, encode_avro,
-                                             iter_avro_records,
-                                             parse_avro_header)
-    schema = {"type": "record", "name": "R", "fields": [
-        {"name": "k", "type": "long"}, {"name": "s", "type": "string"}]}
+    """Avro container with avro.codec=zstd: the writer twin's blocks
+    decode; a container whose block libzstd compressed at another level
+    (re-framed by hand) decodes too."""
+    from datapump_spark.sources.avro import encode_avro, iter_avro_records
     recs = [{"k": i, "s": f"value {i % 7}"} for i in range(500)]
-    b = encode_avro(schema, recs, codec="zstd")
-    got = [r for _, r in iter_avro_records(b)]
-    assert got == recs
-    # re-frame the SAME records with a libzstd-compressed block
-    null_file = encode_avro(schema, recs, codec="null")
-    _, _, r, sync = parse_avro_header(null_file)
-    n = r.long()
-    size = r.long()
-    raw_block = r.raw(size)
-    comp = _lib().compress(raw_block, asbytes=True)
-    header_end = b.index(bytes(range(16))) + 16   # deterministic sync
-    foreign = (b[:header_end] + _zigzag(n) + _zigzag(len(comp))
-               + comp + sync)
-    got2 = [rec for _, rec in iter_avro_records(foreign)]
-    assert got2 == recs
+    b = encode_avro(_avro_schema(), recs, codec="zstd")
+    assert [r for _, r in iter_avro_records(b)] == recs
+    n, raw, sync = _raw_block(encode_avro(_avro_schema(), recs, "null"))
+    foreign = _reframe(b, n, _lib(19).compress(raw, asbytes=True), sync)
+    assert [rec for _, rec in iter_avro_records(foreign)] == recs
 
 
 def test_avro_zstd_corrupt_block_raises():
@@ -201,61 +193,51 @@ def test_read_avro_zstd_spark(spark, tmp_path):
 
 
 def test_zlib_crc_unused_guard():
-    """The zstd Avro path must NOT expect snappy's CRC32 suffix —
-    a frame followed by 4 junk bytes fails sync, not CRC."""
-    assert zlib.crc32(b"") == 0                   # import used
-    fr = encode_zstd(b"payload")
-    assert decode_zstd(fr) == b"payload"
+    """The zstd Avro path must NOT expect snappy's CRC32 suffix: a
+    block that is exactly one zstd frame decodes, and the same frame
+    followed by 4 CRC-like bytes is refused."""
+    import zlib
 
+    from datapump_spark.sources.avro import encode_avro, iter_avro_records
+    recs = [{"k": 1, "s": "one"}, {"k": 2, "s": "two"}]
+    b = encode_avro(_avro_schema(), recs, codec="zstd")
+    n, raw, sync = _raw_block(encode_avro(_avro_schema(), recs, "null"))
+    frame = _lib().compress(raw, asbytes=True)
+    assert [x for _, x in iter_avro_records(
+        _reframe(b, n, frame, sync))] == recs
+    crc = (zlib.crc32(raw) & 0xFFFFFFFF).to_bytes(4, "big")
+    with pytest.raises(UnsupportedMediaError, match="Avro block: zstd"):
+        list(iter_avro_records(_reframe(b, n, frame + crc, sync)))
 
-# ---------------------------------------------------------------------------
-# Dictionary support (r12 continuation): trained dicts, RFC 8878 §5
-# ---------------------------------------------------------------------------
 
 _ZSTD_CLI = __import__("shutil").which("zstd")
 
 
 @pytest.mark.skipif(_ZSTD_CLI is None, reason="zstd CLI not present")
 def test_trained_dictionary_conformance(tmp_path):
-    """Train a REAL dictionary with the reference zstd CLI, compress
-    foreign samples with -D at several levels, decode with the parsed
-    dictionary: the full §5 path (entropy-table init, repeat offsets,
-    content-seeded match window) against reference bytes."""
-    import random
+    """A ``.jsonl.zst`` compressed against a REAL trained dictionary
+    (``zstd --train`` + ``zstd -D``) is refused: dictionaries are not
+    supported, and the error names the file and the codec instead of
+    returning wrong bytes."""
     import subprocess
-
-    from datapump_spark.operators.zstd import parse_zstd_dict
 
     rnd = random.Random(7)
     words = ["the", "quick", "brown", "fox", "spark", "engine",
              "corpus", "tokens", "shuffle", "partition", "broadcast"]
     samples = tmp_path / "samples"
     samples.mkdir()
-    texts = {}
     for i in range(200):
         t = (" ".join(rnd.choice(words) for _ in range(150))
              + f" doc{i}").encode()
-        (samples / f"s{i}.txt").write_bytes(t)
-        texts[i] = t
+        (samples / f"s{i}.jsonl").write_bytes(
+            b'{"text": "' + t + b'"}\n')
     dict_path = tmp_path / "dict.bin"
     subprocess.run([_ZSTD_CLI, "--train", *map(str, samples.iterdir()),
                     "-o", str(dict_path)], check=True,
                    capture_output=True)
-    d = dict_path.read_bytes()
-    info = parse_zstd_dict(d)
-    assert info["dict_id"] != 0 and len(info["content"]) > 1000
-    dicts = {info["dict_id"]: d}
-    for i, lv in ((0, 3), (17, 1), (42, 19), (99, 3)):
-        z = tmp_path / f"s{i}.zst"
-        subprocess.run([_ZSTD_CLI, "-q", f"-{lv}", "-D", str(dict_path),
-                        str(samples / f"s{i}.txt"), "-o", str(z)],
-                       check=True)
-        assert decode_zstd(z.read_bytes(), dicts=dicts) == texts[i]
-    # honest refusal without the dictionary
-    z0 = (tmp_path / "s0.zst").read_bytes()
-    with pytest.raises(UnsupportedMediaError, match="dictionary"):
-        decode_zstd(z0)
-    # raw content blob (no magic) parses as a content-only dictionary
-    raw = parse_zstd_dict(b"just a prefix window")
-    assert raw["dict_id"] == 0 and raw["huff"] is None
-    assert raw["content"] == b"just a prefix window"
+    z = tmp_path / "s0.jsonl.zst"
+    subprocess.run([_ZSTD_CLI, "-q", "-3", "-D", str(dict_path),
+                    str(samples / "s0.jsonl"), "-o", str(z)], check=True)
+    with pytest.raises(UnsupportedMediaError,
+                       match=r"s0\.jsonl\.zst: zstd: .*[Dd]ictionary"):
+        decompress_auto(z.name, z.read_bytes())
