@@ -57,26 +57,21 @@ _WORTH_PERSISTING = (
 )
 
 
-def persist_shared(df: DataFrame, grows: bool = False) -> DataFrame:
+def persist_shared(df: DataFrame) -> DataFrame:
     """Size-aware persist policy for multi-consumer frames (r13, VERDICT
     r12 #6; guide §5 "persist only when recomputing is more expensive
     than the memory pressure").
 
-    Persist (scoped) only when BOTH hold:
-    - the frame's lineage contains a wide step or a Python-boundary
-      kernel (so the persist actually dedupes an exchange or expensive
-      per-row Python, not just a narrow scan), checked statically on
-      the analyzed logical plan; and
-    - the caller declares the frame no larger than its input
-      (``grows=False``) — a larger-than-input cache (e.g. an exploded
-      per-token stream) costs more to hold than to recompute at any
-      real scale (the r12 ccnet caveat).
-
-    Otherwise the frame is returned unchanged and consumers recompute
-    the (narrow, partial-aggregation-friendly) subtree.
+    Persist (scoped) only when the frame's lineage contains a wide step
+    or a Python-boundary kernel — so the persist actually dedupes an
+    exchange or expensive per-row Python, not just a narrow scan —
+    checked statically on the analyzed logical plan. Otherwise the frame
+    is returned unchanged and consumers recompute the (narrow,
+    partial-aggregation-friendly) subtree. A frame larger than its input
+    (e.g. an exploded per-token stream) costs more to hold than to
+    recompute at any real scale (the r12 ccnet caveat): its callers do
+    not pass it here at all.
     """
-    if grows:
-        return df
     try:
         plan = df._jdf.queryExecution().analyzed().toString()
     except Exception:  # noqa: BLE001 — policy must never fail a query

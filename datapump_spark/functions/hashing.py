@@ -81,3 +81,11 @@ def tokens_sql(expr: str) -> str:
     return (
         f"list_filter(string_split_regex(lower({expr}), '[^a-z0-9]+'), x -> x != '')"
     )
+
+
+def sql_ident(name: str) -> str:
+    """Backtick-quoted identifier with embedded backticks escaped
+    (`` -> ````), so a column name can never break out of the quoting.
+    ``F.col(sql_ident(name))`` also resolves names the plain ``F.col``
+    parser rejects."""
+    return f"`{name.replace('`', '``')}`"

@@ -6,9 +6,12 @@ a training document is *contaminated* when it shares at least
 ``min_overlap`` distinct word ``n``-grams (n=13 is the published norm)
 with any benchmark document. Both sides reduce to (doc, gram-hash)
 pairs; the benchmark side is tiny (eval sets are thousands of rows), so
-its distinct gram set broadcasts and the corpus side never shuffles —
-the only exchange is the per-document hit count aggregation, which runs
-on post-join survivors (a vanishing fraction of the corpus at 100 TB).
+its distinct gram set broadcasts and the corpus side never shuffles.
+:func:`decontaminate` counts the benchmark and, while it fits the
+driver, scans the corpus once against a broadcast Python set of its
+grams; a larger benchmark takes the gram join, whose only exchange is
+the per-document hit count aggregation on post-join survivors (a
+vanishing fraction of the corpus at 100 TB).
 
 Hashing uses the cross-engine md5→bigint profile by default so the
 DuckDB oracle can replay it; production flips ``hash_fn='xxhash64'``
@@ -25,10 +28,10 @@ from pyspark.sql import functions as F
 from datapump_spark.cachescope import scoped_persist
 from datapump_spark.functions.hashing import hash63, tokens
 
-# 'auto' strategy: benchmark row count at or under this → broadcast-set
-# mapInPandas scan; above → expr gram-join. Eval sets are thousands of
-# rows; 200k rows × ~1k grams/doc of 13-word strings is the practical
-# ceiling for a driver-built Python set broadcast.
+# decontaminate's path gate: benchmark row count at or under this →
+# broadcast-set mapInPandas scan; above → expr gram-join. Eval sets are
+# thousands of rows; 200k rows × ~1k grams/doc of 13-word strings is the
+# practical ceiling for a driver-built Python set broadcast.
 AUTO_PANDAS_MAX_BENCH_ROWS = 200_000
 
 
@@ -60,7 +63,6 @@ def decontaminate(
     n: int = 13,
     min_overlap: int = 1,
     hash_fn: str = "md5",
-    strategy: str = "expr",
 ) -> DataFrame:
     """Flag corpus documents sharing ≥ ``min_overlap`` distinct
     ``n``-grams with the benchmark.
@@ -70,33 +72,25 @@ def decontaminate(
     routes them (same keep-column contract as
     :func:`~datapump_spark.operators.quality.gopher_filter`).
 
-    ``strategy='expr'`` is the oracle-verifiable column-expression plan
-    (gram explode → broadcast join → agg). ``strategy='pandas'`` is the
-    production path: the benchmark's distinct grams (the small side by
-    construction) become a broadcast Python set and the corpus is scanned
-    ONCE with an Arrow-batched set-membership pass — no explode, no
-    shuffle, no join. It exists because Spark evaluates higher-order
-    lambda expressions interpreted (outside whole-stage codegen), so the
-    expr plan pays ~µs per gram where a hash-set probe costs ~ns;
-    measured ~8× faster at 250 k docs (PERF.md). Same results
-    (equivalence tested).
-
-    ``strategy='auto'`` (the recipe default) picks by MEASURED benchmark
+    Two plans with the same result, chosen by the MEASURED benchmark
     size — the same gate pattern as
     :func:`~datapump_spark.operators.dedup_fuzzy.connected_components`:
-    one cheap count on the tiny side, then the broadcast-set scan when it
-    fits comfortably on the driver, else the expr join (which only ever
-    broadcasts hashed grams, never Python sets)."""
-    if strategy == "auto":
-        strategy = ("pandas"
-                    if benchmark.count() <= AUTO_PANDAS_MAX_BENCH_ROWS
-                    else "expr")
-    if strategy == "pandas":
+    one cheap count on the tiny side, then
+
+    - at most ``AUTO_PANDAS_MAX_BENCH_ROWS`` benchmark rows: the
+      benchmark's distinct grams become a broadcast Python set and the
+      corpus is scanned ONCE with an Arrow-batched set-membership pass —
+      no explode, no shuffle, no join. Spark evaluates higher-order
+      lambda expressions interpreted (outside whole-stage codegen), so
+      the gram join pays ~µs per gram where a hash-set probe costs ~ns;
+      measured ~8× faster at 250 k docs (PERF.md).
+    - above it: the column-expression plan (gram explode → broadcast
+      join of the hashed benchmark grams → agg), which never builds a
+      Python set on the driver. ``hash_fn`` applies to this plan only;
+      the set scan compares the gram strings themselves."""
+    if benchmark.count() <= AUTO_PANDAS_MAX_BENCH_ROWS:
         return _decontaminate_pandas(
             corpus, benchmark, id_col, text_col, n, min_overlap)
-    if strategy != "expr":
-        raise ValueError(
-            f"strategy must be 'expr', 'pandas', or 'auto': {strategy!r}")
     cg = doc_ngram_hashes(corpus, id_col, text_col, n, hash_fn)
     bg = (doc_ngram_hashes(benchmark, id_col, text_col, n, hash_fn)
           .select("gram").distinct())
@@ -133,7 +127,7 @@ def _decontaminate_pandas(
     corpus: DataFrame, benchmark: DataFrame, id_col: str, text_col: str,
     n: int, min_overlap: int,
 ) -> DataFrame:
-    """Broadcast-set membership scan (see ``strategy='pandas'`` above).
+    """Broadcast-set membership scan (see :func:`decontaminate`).
 
     The benchmark side is collected to the driver — it is the broadcast
     side of the expr plan already, and eval sets are thousands of rows

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datapump_spark.cachescope import persist_shared, scoped_persist
-from datapump_spark.functions.hashing import hash63, tokens
+from datapump_spark.functions.hashing import hash63, sql_ident, tokens
 
 
 def normalize_text(c: Column) -> Column:
@@ -112,7 +112,7 @@ def lsh_candidate_pairs(
     # the band-struct array as ONE parsed expression (was bands x
     # rows_per_band struct/lit/col py4j calls — r13, guide §7.3;
     # identical array literal, identical plan)
-    scope_sql = f", `{scope_col}` AS __scope" if scope_col else ""
+    scope_sql = f", {sql_ident(scope_col)} AS __scope" if scope_col else ""
 
     def _band_sql(b: int) -> str:
         rows = ", ".join(
@@ -326,11 +326,12 @@ def simhash(
 
 def embedding_near_dup(
     df: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    threshold: float = 0.3, strategy: str = "gemm",
-    broadcast_limit: int = 2_000_000, n_blocks: int = 8,
+    threshold: float = 0.3, strategy: str = "gemm", n_blocks: int = 8,
     n_planes: int = 4, seed: int = 42, dim: int | None = None,
 ) -> DataFrame:
     """All-pairs cosine near-dup. (id_a, id_b, cos).
+
+    ``strategy`` picks between an exact and an approximate answer:
 
     - ``gemm`` (default): EXACT blocked distributed GEMM. Rows are hashed
       into ``n_blocks`` blocks; every unordered block pair (i ≤ j) becomes
@@ -340,91 +341,19 @@ def embedding_near_dup(
       per-task memory is 2N/n_blocks vectors — size ``n_blocks`` so that
       fits the executor (compute stays inherently O(N²), which is the
       price of exactness; see ``gemm_lsh`` for the pruned pair space).
+      ``n_blocks=1`` is one whole-corpus GEMM.
     - ``gemm_lsh``: production path at 100 TB — random-hyperplane LSH
       buckets (similarity.lsh_bucket) then one GEMM per bucket, so the
       pair space is pruned to same-bucket pairs. Approximate (cross-bucket
       pairs are missed; recall graded in tests), linear shuffle, and the
-      bucket id doubles as the natural partition/bucketBy key.
-    - ``gemm_global``: the round-1 baseline — collect + broadcast the
-      normalized corpus matrix, one GEMM per Arrow batch. Guarded by
-      ``broadcast_limit`` (rows×dims); kept as an opt-in yardstick only.
-    - ``fold``: pure column expressions (zip_with+aggregate) — slower, but
-      zero Python and byte-stable vs the sequential-fold oracle."""
+      bucket id doubles as the natural partition/bucketBy key."""
     if strategy == "gemm":
         return _embedding_near_dup_blocked(df, id_col, vec_col, threshold, n_blocks)
     if strategy == "gemm_lsh":
         return _embedding_near_dup_lsh(df, id_col, vec_col, threshold,
                                        n_planes, seed, dim)
-    if strategy == "gemm_global":
-        return _embedding_near_dup_gemm(df, id_col, vec_col, threshold, broadcast_limit)
-    if strategy != "fold":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    base = df.select(
-        F.col(id_col), v.alias("v"),
-        F.sqrt(F.aggregate(F.transform(v, lambda x: x * x),
-                           F.lit(0.0), lambda acc, x: acc + x)).alias("nrm"),
-    )
-    a = base.select(F.col(id_col).alias("id_a"), F.col("v").alias("va"), F.col("nrm").alias("na"))
-    b = base.select(F.col(id_col).alias("id_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0),
-                      lambda acc, x: acc + x)
-    return (
-        a.crossJoin(b)
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", dot / (F.col("na") * F.col("nb")))
-        .where(F.col("cos") >= threshold)
-        .select("id_a", "id_b", F.round("cos", 6).alias("cos"))
-    )
-
-
-def _embedding_near_dup_gemm(
-    df: DataFrame, id_col: str, vec_col: str, threshold: float,
-    broadcast_limit: int,
-) -> DataFrame:
-    import numpy as np
-    from pyspark.sql import types as T
-
-    corpus = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).collect()
-    dim = len(corpus[0]["v"]) if corpus else 0
-    if len(corpus) * dim > broadcast_limit:
-        raise ValueError(
-            f"corpus too large to broadcast ({len(corpus)}x{dim}); "
-            "bucket with LSH first and GEMM per bucket"
-        )
-    ids = np.array([r["id"] for r in corpus], dtype=np.int64)
-    B = np.array([r["v"] for r in corpus], dtype=np.float64)
-    Bn = B / np.linalg.norm(B, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((ids, Bn))
-
-    schema = T.StructType([
-        T.StructField("id_a", T.LongType()),
-        T.StructField("id_b", T.LongType()),
-        T.StructField("cos", T.DoubleType()),
-    ])
-
-    def kernel(batches):
-        import pandas as pd
-
-        b_ids, b_mat = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            a_ids = pdf["id"].to_numpy(dtype=np.int64)
-            A = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            An = A / np.linalg.norm(A, axis=1, keepdims=True)
-            S = An @ b_mat.T                       # one BLAS call per block
-            ii, jj = np.nonzero(S >= threshold)
-            ia, ib, cs = a_ids[ii], b_ids[jj], S[ii, jj]
-            keep = ia < ib                         # upper triangle only
-            yield pd.DataFrame({
-                "id_a": ia[keep], "id_b": ib[keep],
-                "cos": np.round(cs[keep], 6),
-            })
-
-    rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    return rows.mapInPandas(kernel, schema)
+    raise ValueError(
+        f"strategy must be 'gemm' or 'gemm_lsh': {strategy!r}")
 
 
 def _pair_schema():
@@ -781,15 +710,17 @@ def hamming_probe(
     widths = [bits // nb + (1 if i < bits % nb else 0) for i in range(nb)]
     offs = [sum(widths[:i]) for i in range(nb)]
 
+    sig = sql_ident(sig_col)
+
     def keyed(df: DataFrame, with_id: bool) -> DataFrame:
         blocks = F.array(*[
             F.struct(
                 F.lit(i).alias("bno"),
-                F.expr(f"(`{sig_col}` >> {offs[i]}) "
+                F.expr(f"({sig} >> {offs[i]}) "
                        f"& {(1 << widths[i]) - 1}").alias("bval"))
             for i in range(nb)])
         cols = ([F.col(id_col).alias("id")] if with_id else []) \
-            + [F.col(sig_col).alias("__sig"), F.explode(blocks).alias("b")]
+            + [F.col(sig).alias("__sig"), F.explode(blocks).alias("b")]
         out = df.select(*cols)
         return out.select(*(["id"] if with_id else []),
                           "__sig", F.col("b.bno").alias("bno"),
@@ -821,14 +752,15 @@ def hamming_pairs(
     widths = [bits // nb + (1 if i < bits % nb else 0) for i in range(nb)]
     offs = [sum(widths[:i]) for i in range(nb)]
 
+    sig = sql_ident(sig_col)
     blocks = F.array(*[
         F.struct(
             F.lit(i).alias("bno"),
-            F.expr(f"(`{sig_col}` >> {offs[i]}) & {(1 << widths[i]) - 1}")
+            F.expr(f"({sig} >> {offs[i]}) & {(1 << widths[i]) - 1}")
             .alias("bval"))
         for i in range(nb)])
     keyed = sigs.select(
-        F.col(id_col).alias("id"), F.col(sig_col).alias("__sig"),
+        F.col(id_col).alias("id"), F.col(sig).alias("__sig"),
         F.explode(blocks).alias("b")
     ).select("id", "__sig", F.col("b.bno").alias("bno"),
              F.col("b.bval").alias("bval"))

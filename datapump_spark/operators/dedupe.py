@@ -10,21 +10,21 @@ caller must provide (or we synthesize) an explicit ordering column. For batch
 CSV ingestion we synthesize one from ``monotonically_increasing_id()`` — it is
 monotone within each file-split and files are single-split at reference-scale
 inputs; for the oracle-checked variants we order by an existing unique key.
-Keep-first = ``row_number() OVER (PARTITION BY pk ORDER BY ord ASC) = 1``;
-keep-last flips to DESC. A plain ``dropDuplicates`` is NOT faithful for
-``last`` (SURVEY §2.3 F4).
+Keep-first = ``min_by(struct(*cols), ord)`` per key; keep-last flips to
+``max_by``. A plain ``dropDuplicates`` is NOT faithful for ``last``
+(SURVEY §2.3 F4).
 
-Scale: the window shuffles once on the PK — the same shuffle an aggregation
-would need, no extra pass. At 100 TB the PK partitioning is the natural
-clustering for the downstream MERGE sink, so this shuffle is reused, and AQE
-splits skewed PK partitions. No collect, no Python rows.
+Scale: one hash aggregation keyed on the PK with a map-side partial
+combine and no sort — the same shuffle any per-key step needs. Hot keys
+collapse map-side, and at 100 TB the PK partitioning is the natural
+clustering for the downstream MERGE sink. No collect, no Python rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -48,7 +48,6 @@ def dedupe_by_key(
     keys: Sequence[str],
     order_col: str | Column,
     keep: str = "first",
-    strategy: str = "agg",
 ) -> DataFrame:
     """Keep exactly one row per key group: the one with min (keep='first')
     or max (keep='last') ``order_col``. Faithful port of datapump.py:446-456
@@ -56,36 +55,21 @@ def dedupe_by_key(
 
     ``keep=''`` (reference's falsy no-op, datapump.py:446) returns df as-is.
 
-    Strategies (identical results, different physical plans):
-    - ``agg`` (default): ``min_by/max_by(struct(*cols), ord)`` — a hash
-      aggregation with map-side partial combine and NO sort; each partial
-      state is one row per key. The scale winner: survives skewed keys
-      (partial combine collapses hot keys map-side) and never sorts 100 TB.
-    - ``window``: ``row_number() OVER (PARTITION BY keys ORDER BY ord)`` —
-      sort-based; kept for plan comparison and as the shape SQL users expect.
+    Plan: ``min_by/max_by(struct(*cols), ord)`` — a hash aggregation with
+    map-side partial combine and NO sort; each partial state is one row
+    per key, so skewed keys collapse map-side and 100 TB is never sorted.
     """
     if not keep:
         return df
     if keep not in ("first", "last"):
         raise ValueError(f"keep must be 'first', 'last' or '' — got {keep!r}")
     ord_c = F.col(order_col) if isinstance(order_col, str) else order_col
-
-    if strategy == "agg":
-        pick = F.min_by if keep == "first" else F.max_by
-        row = F.struct(*[F.col(c) for c in df.columns])
-        out = df.groupBy(*[F.col(k) for k in keys]).agg(
-            pick(row, ord_c).alias("__row")
-        )
-        return out.select("__row.*")
-
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-        ord_c.asc() if keep == "first" else ord_c.desc()
+    pick = F.min_by if keep == "first" else F.max_by
+    row = F.struct(*[F.col(c) for c in df.columns])
+    out = df.groupBy(*[F.col(k) for k in keys]).agg(
+        pick(row, ord_c).alias("__row")
     )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return out.select("__row.*")
 
 
 def with_file_order(df: DataFrame, col_name: str = "__file_order") -> DataFrame:
@@ -98,7 +82,7 @@ def with_file_order(df: DataFrame, col_name: str = "__file_order") -> DataFrame:
     the split's byte offset restores file order regardless of which
     executor read which split, and the monotonic id orders rows inside a
     split. Struct comparison is lexicographic, so the column drops straight
-    into ``min_by``/``max_by``/window ``ORDER BY``.
+    into ``min_by``/``max_by``.
 
     Non-file frames (no ``_metadata``) fall back to ``struct('', 0,
     monotonic id)`` — exact whenever the frame is a single in-order

@@ -14,7 +14,7 @@ Scale design:
   batch is stacked into one numpy matrix and multiplied with a single BLAS
   GEMM (the vectorized fast path; a per-row higher-order-function
   formulation would be interpreted per element — the same reasoning as
-  decontaminate's pandas strategy, PERF.md).
+  decontaminate's broadcast-set scan, PERF.md).
 - :func:`normalize_vecs` stays a pure column expression (codegen) since
   it is one pass over the array with no matrix math.
 

@@ -48,6 +48,7 @@ from __future__ import annotations
 from itertools import product
 
 from datapump_spark.cachescope import scoped_persist
+from datapump_spark.functions.hashing import sql_ident
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -59,10 +60,6 @@ _CONSONANTS = "bcdfghjklmnpqrstvwxyz"
 # alphabet; any grouping is lossless, finer groupings prune harder
 _CLASSES = ["aeiou", "bcd", "fgh", "jkl", "mnp", "qrs", "tvw", "xyz",
             "0123", "4567", "89", " "]
-
-
-def _count_of(t: Column, chars: str) -> Column:
-    return (F.length(t) - F.length(F.translate(t, chars, ""))).cast("int")
 
 
 def edit_distance_pairs(
@@ -81,13 +78,12 @@ def edit_distance_pairs(
     """
     if max_dist < 1:
         raise ValueError("max_dist must be ≥ 1")
-    t = F.col(text_col)
+    txt = sql_ident(text_col)
     # numeric feature chains as parsed SQL (r13, guide §7.3): the
     # per-class translate/length chains and the 3^d combo structs were
     # ~400 py4j Column calls per build; identical expressions parsed
     # server-side. (SQL int/int division is fractional, like the
     # Column API's — floor() yields the same BIGINT bands.)
-    txt = f"`{text_col}`"
 
     def _count_sql(expr: str, chars: str) -> str:
         return (f"CAST(length({expr}) - "
@@ -111,7 +107,7 @@ def edit_distance_pairs(
     # the scan count.
     base = scoped_persist(df.select(
         F.col(id_col).alias("id"),
-        t.alias("t"),
+        F.col(txt).alias("t"),
         *[F.expr(f"floor({d} / {max_dist})").alias(f"__b{i}")
           for i, d in enumerate(dims_sql)],
         *xb,

@@ -17,10 +17,10 @@ Spark-first shape, same doctrine as ``operators/pq.py``:
   literal arrays — a scan, no shuffle, no Python.
 - **search**: the affine structure folds into one dot product:
   score = ⟨q, min⟩ (per-query scalar) + Σᵢ (qᵢ·stepᵢ)·codeᵢ — the
-  second term a codegen zip_with/aggregate over the int codes with the
-  per-query weighted vector broadcast, exactly pq_topk's LUT pattern
-  with the LUT replaced by a weight array. Optional exact re-rank of the
-  shortlist reuses pq's broadcast-semi-join helper.
+  second term one Arrow-batched GEMM per batch of codes against the
+  per-query weight matrix (numpy BLAS, no interpreted per-element
+  lambdas). Optional exact re-rank of the shortlist reuses pq's
+  broadcast-semi-join helper.
 
 The driver only ever holds the 2×dim model and the query set (few by
 contract, same as every other ANN path here).
@@ -114,7 +114,7 @@ def sq8_topk(
     df: DataFrame, model: dict, id_col: str = "vec_id",
     vec_col: str = "embedding", k: int = 5, query_max_id: int = 10,
     codes: DataFrame | None = None, rerank_factor: int = 0,
-    queries: DataFrame | None = None, strategy: str = "expr",
+    queries: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k over the SQ8-compressed corpus.
 
@@ -123,19 +123,12 @@ def sq8_topk(
     k·factor shortlist with exact cosine via a broadcast semi-join
     (pq_topk's two-stage layout).
 
-    Two scan strategies, identical results (equivalence tested), the
-    same dual-path doctrine as ``operators.decontam``:
-
-    - ``'expr'``: one codegen-side zip_with/aggregate per (row, query)
-      with a per-query weight array broadcast — zero Python, the
-      oracle-friendly plan. Spark evaluates higher-order lambdas
-      interpreted, so cost is ~dim lambda evals per scored pair.
-    - ``'pandas'``: Arrow-batched GEMM — every batch's code matrix
-      multiplies the whole query weight matrix at once (numpy BLAS,
-      ~dim·n·q flops with no interpreter in the loop). The production
-      path when queries are many; still no shuffle, nothing on the
-      driver beyond the 2×dim model and the query set."""
+    The scan is an Arrow-batched GEMM: every batch's code matrix
+    multiplies the whole query weight matrix at once (numpy BLAS,
+    ~dim·n·q flops with no interpreter in the loop). No shuffle, and
+    nothing on the driver beyond the 2×dim model and the query set."""
     import numpy as np
+    import pandas as pd
 
     if codes is None:
         codes = sq8_encode(df, model, id_col, vec_col)
@@ -152,50 +145,27 @@ def sq8_topk(
     Q = np.asarray([r["v"] for r in qrows], dtype="float64")
     qmins = Q @ mins                       # per-query scalar term
     W = Q * steps                          # per-query folded weights
-    q = spark.createDataFrame(
-        [(qids[i], float(qmins[i]), [float(x) for x in W[i]],
-          [float(x) for x in Q[i]]) for i in range(len(qids))],
-        "query_id bigint, qmin double, w array<double>, qv array<double>")
+    qid_arr = np.asarray(qids)
 
-    if strategy == "expr":
-        scored = (
-            codes.select(F.col("id").alias("neighbor_id"), "codes")
-            .crossJoin(F.broadcast(q.select("query_id", "qmin", "w")))
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .withColumn(
-                "score",
-                F.round(
-                    F.col("qmin") + F.aggregate(
-                        F.zip_with("codes", "w", lambda c, wi: c * wi),
-                        F.lit(0.0), lambda acc, x: acc + x),
-                    6))
-        )
-    elif strategy == "pandas":
-        import pandas as pd
+    def kernel(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            C = np.asarray([np.asarray(c, dtype="float64")
+                            for c in pdf["codes"]])
+            S = C @ W.T + qmins            # (batch, n_queries)
+            nid = pdf["id"].to_numpy()
+            n, nq = S.shape
+            yield pd.DataFrame({
+                "neighbor_id": np.repeat(nid, nq),
+                "query_id": np.tile(qid_arr, n),
+                "score": np.round(S.reshape(-1), 6),
+            })
 
-        qid_arr = np.asarray(qids)
-
-        def kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                C = np.asarray([np.asarray(c, dtype="float64")
-                                for c in pdf["codes"]])
-                S = C @ W.T + qmins        # (batch, n_queries)
-                nid = pdf["id"].to_numpy()
-                n, nq = S.shape
-                yield pd.DataFrame({
-                    "neighbor_id": np.repeat(nid, nq),
-                    "query_id": np.tile(qid_arr, n),
-                    "score": np.round(S.reshape(-1), 6),
-                })
-
-        scored = codes.mapInPandas(
-            kernel,
-            "neighbor_id bigint, query_id bigint, score double",
-        ).where(F.col("neighbor_id") != F.col("query_id"))
-    else:
-        raise ValueError(f"strategy must be 'expr' or 'pandas': {strategy!r}")
+    scored = codes.mapInPandas(
+        kernel,
+        "neighbor_id bigint, query_id bigint, score double",
+    ).where(F.col("neighbor_id") != F.col("query_id"))
 
     shortlist_k = k * rerank_factor if rerank_factor > 0 else k
     approx = _top(scored, shortlist_k)
@@ -203,7 +173,10 @@ def sq8_topk(
         return approx
     corpus = _l2_normalized(df, id_col, vec_col).select(
         F.col("id").alias("neighbor_id"), F.col("v").alias("cv"))
-    return _exact_rerank(approx, corpus, q.select("query_id", "qv"), k)
+    q = spark.createDataFrame(
+        [(qids[i], [float(x) for x in Q[i]]) for i in range(len(qids))],
+        "query_id bigint, qv array<double>")
+    return _exact_rerank(approx, corpus, q, k)
 
 
 def sq8_reconstruction_mse(df: DataFrame, model: dict,

@@ -13,25 +13,16 @@ Scale design:
   (executor-side heaps, only K rows move), never a full sort. Ids are
   assigned by ``(count DESC, token ASC)`` — fully deterministic across
   runs and cluster sizes.
-- :func:`encode_tokens` — two strategies, same contract as
-  ``decontaminate``:
-
-  * ``strategy='join'`` (oracle-verifiable): posexplode → broadcast-join
-    the vocab → re-assemble per document with
-    ``sort_array(collect_list(struct(pos, id)))``. One shuffle keyed by
-    doc id; shuffle volume ≈ 8 bytes/token.
-  * ``strategy='pandas'`` (production): the vocab (small by construction
-    — K entries) becomes a broadcast Python dict and documents are
-    encoded in ONE Arrow-batched ``mapInPandas`` scan — no explode, no
-    shuffle, no join. Same reasoning as decontaminate's pandas path:
-    dict probes cost ~ns where interpreted higher-order lambdas cost ~µs.
-    Equivalence with 'join' is pytest-pinned.
+- :func:`encode_tokens` — posexplode → broadcast-join the vocab →
+  re-assemble per document with
+  ``sort_array(collect_list(struct(pos, id)))``. One shuffle keyed by doc
+  id; shuffle volume ≈ 8 bytes/token. It tokenizes with the same
+  :func:`~datapump_spark.functions.hashing.tokens` expression as
+  :func:`build_vocab`, so a token counted into the vocabulary always
+  encodes to its id.
 """
 
 from __future__ import annotations
-
-import re
-from typing import Iterator
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -63,13 +54,8 @@ def build_vocab(df: DataFrame, text_col: str = "text", top_k: int = 30_000,
 
 
 def encode_tokens(df: DataFrame, vocab: DataFrame, id_col: str = "doc_id",
-                  text_col: str = "text", unk_id: int = UNK_ID,
-                  strategy: str = "join") -> DataFrame:
+                  text_col: str = "text", unk_id: int = UNK_ID) -> DataFrame:
     """(id, token_ids array<int>, n_tokens, n_oov). See module docstring."""
-    if strategy == "pandas":
-        return _encode_pandas(df, vocab, id_col, text_col, unk_id)
-    if strategy != "join":
-        raise ValueError(f"strategy must be 'join' or 'pandas': {strategy!r}")
     toks = df.select(
         F.col(id_col),
         F.posexplode_outer(tokens(F.col(text_col))).alias("pos", "token"),
@@ -91,40 +77,6 @@ def encode_tokens(df: DataFrame, vocab: DataFrame, id_col: str = "doc_id",
         F.size(F.filter(pairs, lambda p: p["tid"] == F.lit(unk_id)))
         .cast("bigint").alias("n_oov"),
     )
-
-
-_TOK_RE = re.compile(r"[^a-z0-9]+")
-
-
-def _encode_pandas(df: DataFrame, vocab: DataFrame, id_col: str,
-                   text_col: str, unk_id: int) -> DataFrame:
-    import pandas as pd
-
-    spark = df.sparkSession
-    mapping = {r["token"]: r["token_id"]
-               for r in vocab.select("token", "token_id").collect()}
-    bc = spark.sparkContext.broadcast(mapping)
-    out_schema = (f"{id_col} bigint, token_ids array<int>, "
-                  f"n_tokens bigint, n_oov bigint")
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        m = bc.value
-        for pdf in batches:
-            ids_col, ntok, noov = [], [], []
-            for text in pdf[text_col]:
-                ts = [t for t in _TOK_RE.split((text or "").lower()) if t]
-                ids = [m.get(t, unk_id) for t in ts]
-                ids_col.append(ids)
-                ntok.append(len(ids))
-                noov.append(sum(1 for i in ids if i == unk_id))
-            yield pd.DataFrame({
-                id_col: pdf[id_col],
-                "token_ids": ids_col,
-                "n_tokens": ntok,
-                "n_oov": noov,
-            })
-
-    return df.select(id_col, text_col).mapInPandas(encode, schema=out_schema)
 
 
 def vocab_coverage(encoded: DataFrame) -> DataFrame:

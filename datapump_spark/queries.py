@@ -768,16 +768,13 @@ def q_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQ8 scalar-quantized top-5 (operators/sq.py): per-dim affine 8-bit
     codes (dim bytes/vector, near-exact recall — the compression point
-    between float scan and PQ) scored by one codegen zip_with/aggregate
-    with a per-query folded weight vector; exact re-rank of the
-    shortlist. Bench-only; recall + expr≡pandas equivalence graded in
-    test_sq. Benches the production GEMM scan (the expr twin costs ~dim
-    interpreted lambda evals per scored pair — both measured, PERF.md)."""
+    between float scan and PQ) scored by an Arrow-batched GEMM against
+    the per-query folded weight vectors; exact re-rank of the
+    shortlist. Bench-only; recall graded in test_sq."""
     from datapump_spark.operators.sq import sq8_topk, train_sq8
     emb = _t(spark, sf_dir, "embeddings")
     model = train_sq8(emb, dim=_emb_dim(sf_dir))
-    return sq8_topk(emb, model, k=5, query_max_id=10, rerank_factor=4,
-                    strategy="pandas")
+    return sq8_topk(emb, model, k=5, query_max_id=10, rerank_factor=4)
 
 
 def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -788,30 +785,12 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n_cells=16, n_probe=4)
 
 
-# near_dup_clusters is the upstream of BOTH q_dup_clusters and
-# q_canonical_docs (clustering feeds representative selection in the real
-# pipeline); memoize the persisted frame per (session, sf_dir) so a run that
-# executes both pays the MinHash+CC cost once — the "reuse a partitioning
-# across stages" rule applied across the query boundary.
-_CLUSTER_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
-def _clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from datapump_spark.operators.dedup_fuzzy import near_dup_clusters
-
-    key = (id(spark), sf_dir)
-    if key not in _CLUSTER_CACHE:
-        _CLUSTER_CACHE[key] = near_dup_clusters(
-            _t(spark, sf_dir, "documents"), threshold=0.5
-        ).persist()
-    return _CLUSTER_CACHE[key]
-
-
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: MinHash pairs → connected components (min-label
     propagation). Every doc gets a cluster_id = min id of its component;
     the DuckDB twin is a recursive CTE over the same pair graph."""
-    return _clusters(spark, sf_dir)
+    from datapump_spark.operators.dedup_fuzzy import near_dup_clusters
+    return near_dup_clusters(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 def q_group_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2302,13 +2281,16 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup pipeline composition: near-dup clusters → per-cluster
-    representative by quality score (ties → lowest doc_id). Reuses the
-    persisted cluster frame from q_dup_clusters (see _clusters)."""
-    from datapump_spark.operators.dedup_fuzzy import canonical_docs
+    representative by quality score (ties → lowest doc_id)."""
+    from datapump_spark.operators.dedup_fuzzy import (
+        canonical_docs,
+        near_dup_clusters,
+    )
     from datapump_spark.operators.text import quality_score
 
     docs = _t(spark, sf_dir, "documents")
-    return canonical_docs(_clusters(spark, sf_dir), quality_score(docs))
+    return canonical_docs(near_dup_clusters(docs, threshold=0.5),
+                          quality_score(docs))
 
 
 def q_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3227,11 +3209,12 @@ def q_leakage_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-safe train/val/test split (operators/splits.py): split
     assignment hashed on the near-dup CLUSTER id, so paraphrase pairs
     can never straddle train/test (Lee et al. 2021). Scan-speed on top
-    of the clustering; shares the cached cluster frame with
-    q_dup_clusters/q_canonical_docs."""
+    of the clustering."""
+    from datapump_spark.operators.dedup_fuzzy import near_dup_clusters
     from datapump_spark.operators.splits import leakage_safe_split
 
-    return leakage_safe_split(_clusters(spark, sf_dir))
+    return leakage_safe_split(near_dup_clusters(
+        _t(spark, sf_dir, "documents"), threshold=0.5))
 
 
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -46,7 +46,6 @@ class CorpusRecipe:
 
     min_words: int = 50
     decontam_n: int = 13
-    decontam_strategy: str = "auto"  # measured-size gate, decontam.py
     # surgical decontamination: cut ONLY the benchmark-overlapping spans
     # (operators/decontam.remove_contaminated_spans) instead of dropping
     # whole flagged docs; docs that were pure benchmark quotes empty out
@@ -157,8 +156,7 @@ def pretrain_corpus(
                       .withColumn("reject_reason", F.lit("contaminated")))
     elif benchmark is not None:
         flags = decontaminate(cur, benchmark, id_col, text_col,
-                              n=r.decontam_n, hash_fn=r.hash_fn,
-                              strategy=r.decontam_strategy)
+                              n=r.decontam_n, hash_fn=r.hash_fn)
         bad = flags.where(F.col("contaminated")).select(id_col)
         rej_contam = bad.withColumn("reject_reason", F.lit("contaminated"))
         cur = cur.join(bad, id_col, "anti")

@@ -271,6 +271,67 @@ class ParquetMergeSink:
     def _bucket_expr(self, keys: Sequence[str], n: int):
         return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(n)).cast("int")
 
+    def _merge_buckets(self, spark: SparkSession, batch: DataFrame,
+                       table: str, keys: Sequence[str],
+                       merge: Callable[[DataFrame, DataFrame], DataFrame],
+                       ) -> None:
+        """The bucketed MERGE shared by :meth:`upsert` and
+        :meth:`apply_cdc`: check the batch keys against the table's
+        bucket keys, tag the batch with ``pk_bucket``, and rewrite only
+        the buckets it touches as ``merge(current rows of those buckets,
+        tagged batch)``. Unaffected buckets are hardlinked into the new
+        version and the pointer flips atomically.
+
+        The first write has no current rows: the tagged batch is the
+        table. A table without bucket directories (written by
+        :meth:`overwrite`) is migrated once: all its rows go through
+        ``merge``."""
+        props = self.get_properties(table)
+        n = int(props.get("bucket_count", self.n_buckets))
+        stored_keys = props.get("bucket_keys")
+        if stored_keys is not None and list(stored_keys) != list(keys):
+            raise ValueError(
+                f"table {table!r} bucketed by {stored_keys}, "
+                f"batch keyed by {list(keys)}")
+        bdf = batch.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
+
+        cur_dir = self.current_version(table)
+        bucketed = cur_dir is not None and any(cur_dir.glob(f"{BUCKET_COL}=*"))
+        if cur_dir is None:
+            merged = bdf
+        elif not bucketed:
+            current = self.read(spark, table)
+            merged = merge(
+                current.withColumn(BUCKET_COL, self._bucket_expr(keys, n)),
+                bdf)
+        else:
+            affected = sorted(r[BUCKET_COL] for r in
+                              bdf.select(BUCKET_COL).distinct().collect())
+            # mergeSchema for the same reason as read(): earlier
+            # evolutions may have left mixed-schema buckets behind
+            current = spark.read.option("mergeSchema", "true").parquet(
+                str(cur_dir))  # includes pk_bucket
+            merged = merge(current.where(F.col(BUCKET_COL).isin(affected)),
+                           bdf)
+
+        name, vdir = self._new_version(table)
+        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
+        if bucketed:
+            # carry unaffected buckets over via hardlinks (same inode,
+            # zero copy)
+            affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
+            for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
+                if bucket_dir.name in affected_dirs:
+                    continue
+                dst = vdir / bucket_dir.name
+                dst.mkdir()
+                for fpath in bucket_dir.iterdir():
+                    if fpath.is_file():
+                        (dst / fpath.name).hardlink_to(fpath)
+        self._publish(table, name)
+        if not bucketed:
+            self.set_properties(table, bucket_count=n, bucket_keys=list(keys))
+
     def upsert(self, spark: SparkSession, df: DataFrame, table: str,
                keys: Sequence[str]) -> None:
         """K2 MERGE: batch rows win on PK collision (reference upsert
@@ -284,54 +345,14 @@ class ParquetMergeSink:
         byte-identical files, no data copied — matching the reference's
         incremental upsert cost model (datapump.py:560-566) instead of a
         full-table rewrite per batch."""
-        props = self.get_properties(table)
-        n = int(props.get("bucket_count", self.n_buckets))
-        stored_keys = props.get("bucket_keys")
-        if stored_keys is not None and list(stored_keys) != list(keys):
-            raise ValueError(
-                f"table {table!r} bucketed by {stored_keys}, upsert keyed by {list(keys)}")
-        bdf = df.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
+        keys = list(keys)
 
-        cur_dir = self.current_version(table)
-        bucketed = cur_dir is not None and any(cur_dir.glob(f"{BUCKET_COL}=*"))
-        if cur_dir is None or not bucketed:
-            # first write (or one-time migration of a non-bucketed table)
-            if cur_dir is not None:
-                current = self.read(spark, table)
-                batch_keys = df.select(*keys).distinct()
-                kept = current.join(batch_keys, on=list(keys), how="left_anti")
-                bdf = kept.withColumn(BUCKET_COL, self._bucket_expr(keys, n)) \
-                          .unionByName(bdf, allowMissingColumns=True)
-            name, vdir = self._new_version(table)
-            bdf.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-            self._publish(table, name)
-            self.set_properties(table, bucket_count=n, bucket_keys=list(keys))
-            return
+        def merge(cur: DataFrame, bdf: DataFrame) -> DataFrame:
+            kept = cur.join(df.select(*keys).distinct(), on=keys,
+                            how="left_anti")
+            return kept.unionByName(bdf, allowMissingColumns=True)
 
-        affected = sorted(
-            r[BUCKET_COL] for r in bdf.select(BUCKET_COL).distinct().collect())
-        # mergeSchema for the same reason as read(): earlier evolutions
-        # may have left mixed-schema buckets behind
-        current = spark.read.option("mergeSchema", "true").parquet(
-            str(cur_dir))  # includes pk_bucket
-        cur_aff = current.where(F.col(BUCKET_COL).isin(affected))
-        batch_keys = df.select(*keys).distinct()
-        kept = cur_aff.join(batch_keys, on=list(keys), how="left_anti")
-        merged = kept.unionByName(bdf, allowMissingColumns=True)
-
-        name, vdir = self._new_version(table)
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-        # carry unaffected buckets over via hardlinks (same inode, zero copy)
-        affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
-        for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
-            if bucket_dir.name in affected_dirs:
-                continue
-            dst = vdir / bucket_dir.name
-            dst.mkdir()
-            for fpath in bucket_dir.iterdir():
-                if fpath.is_file():
-                    (dst / fpath.name).hardlink_to(fpath)
-        self._publish(table, name)
+        self._merge_buckets(spark, df, table, keys, merge)
 
     def apply_cdc(self, spark: SparkSession, changes: DataFrame, table: str,
                   keys: Sequence[str], seq_cols: Sequence[str],
@@ -370,50 +391,27 @@ class ParquetMergeSink:
                     *[F.col(f"__w.{c}").alias(c) for c in seq_cols + payload],
                     F.col(f"__w.{TOMBSTONE_COL}").alias(TOMBSTONE_COL))
         )
-        if not self.exists(table):
-            self.upsert(spark, winners, table, keys)
-            return
-        props = self.get_properties(table)
-        n = int(props.get("bucket_count", self.n_buckets))
-        if props.get("bucket_keys") is not None \
-                and list(props["bucket_keys"]) != keys:
-            raise ValueError(
-                f"table {table!r} bucketed by {props['bucket_keys']}, "
-                f"CDC keyed by {keys}")
-        cur_dir = self.current_version(table)
-        bw = winners.withColumn(BUCKET_COL, self._bucket_expr(keys, n))
-        affected = sorted(
-            r[BUCKET_COL] for r in bw.select(BUCKET_COL).distinct().collect())
-        current = spark.read.option("mergeSchema", "true").parquet(str(cur_dir))
-        cur_aff = current.where(F.col(BUCKET_COL).isin(affected))
-        w_seq = winners.select(
-            *keys, seq_struct.alias("__wseq"))
-        # stored row survives unless a batch winner with seq >= its own
-        # exists for the key
-        kept = (
-            cur_aff.join(F.broadcast(w_seq), on=keys, how="left")
-            .where(F.col("__wseq").isNull() | (F.col("__wseq") < seq_struct))
-            .drop("__wseq")
-        )
-        c_seq = cur_aff.select(*keys, seq_struct.alias("__cseq"))
-        incoming = (
-            bw.join(F.broadcast(c_seq), on=keys, how="left")
-            .where(F.col("__cseq").isNull() | (seq_struct >= F.col("__cseq")))
-            .drop("__cseq")
-        )
-        merged = kept.unionByName(incoming, allowMissingColumns=True)
-        name, vdir = self._new_version(table)
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(str(vdir))
-        affected_dirs = {f"{BUCKET_COL}={b}" for b in affected}
-        for bucket_dir in cur_dir.glob(f"{BUCKET_COL}=*"):
-            if bucket_dir.name in affected_dirs:
-                continue
-            dst = vdir / bucket_dir.name
-            dst.mkdir()
-            for fpath in bucket_dir.iterdir():
-                if fpath.is_file():
-                    (dst / fpath.name).hardlink_to(fpath)
-        self._publish(table, name)
+
+        def merge(cur: DataFrame, bw: DataFrame) -> DataFrame:
+            w_seq = winners.select(*keys, seq_struct.alias("__wseq"))
+            # stored row survives unless a batch winner with seq >= its
+            # own exists for the key
+            kept = (
+                cur.join(F.broadcast(w_seq), on=keys, how="left")
+                .where(F.col("__wseq").isNull()
+                       | (F.col("__wseq") < seq_struct))
+                .drop("__wseq")
+            )
+            c_seq = cur.select(*keys, seq_struct.alias("__cseq"))
+            incoming = (
+                bw.join(F.broadcast(c_seq), on=keys, how="left")
+                .where(F.col("__cseq").isNull()
+                       | (seq_struct >= F.col("__cseq")))
+                .drop("__cseq")
+            )
+            return kept.unionByName(incoming, allowMissingColumns=True)
+
+        self._merge_buckets(spark, winners, table, keys, merge)
 
     def read_state(self, spark: SparkSession, table: str) -> DataFrame:
         """Live CDC state: the table minus tombstone marker rows (and

@@ -238,18 +238,12 @@ def main() -> None:
         runs["line_dedup"] = round(time.perf_counter() - t0, 2)
 
         # decontamination: replicated corpus vs the (fixed-size) benchmark
-        # slice — both the oracle-verifiable expr plan and the production
-        # broadcast-set mapInPandas scan
+        # slice, which is small enough for the broadcast-set scan
         from datapump_spark.operators.decontam import decontaminate
 
         bench_slice = docs.where(F.col("doc_id") % 20 == 0)
         t0 = time.perf_counter()
-        decontaminate(big_docs, bench_slice, hash_fn="xxhash64") \
-            .write.format("noop").mode("overwrite").save()
-        runs["decontam_expr"] = round(time.perf_counter() - t0, 2)
-
-        t0 = time.perf_counter()
-        decontaminate(big_docs, bench_slice, strategy="pandas") \
+        decontaminate(big_docs, bench_slice) \
             .write.format("noop").mode("overwrite").save()
         runs["decontam"] = round(time.perf_counter() - t0, 2)
 

@@ -175,8 +175,7 @@ def main() -> None:
     out["spark"]["span_dedup"] = round(time.perf_counter() - t0, 3)
 
     t0 = time.perf_counter()
-    decontaminate(docs, docs.where(F.col("doc_id") % 20 == 0),
-                  strategy="pandas") \
+    decontaminate(docs, docs.where(F.col("doc_id") % 20 == 0)) \
         .write.format("noop").mode("overwrite").save()
     out["spark"]["decontam"] = round(time.perf_counter() - t0, 3)
 

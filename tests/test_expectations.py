@@ -107,16 +107,17 @@ def test_sql_lit_edge_cases(spark):
     producing unparseable text."""
     import pytest as _pytest
 
+    from datapump_spark.functions.hashing import sql_ident
     from datapump_spark.operators.expectations import (Check,
                                                        ExpectationSuite,
-                                                       _sql_ident, _sql_lit,
-                                                       in_range, in_set)
+                                                       _sql_lit, in_range,
+                                                       in_set)
 
     assert _sql_lit(None) == "NULL"
     assert _sql_lit(float("nan")) == "CAST('NaN' AS DOUBLE)"
     assert _sql_lit(float("inf")) == "CAST('Infinity' AS DOUBLE)"
     assert _sql_lit(float("-inf")) == "CAST('-Infinity' AS DOUBLE)"
-    assert _sql_ident("a`b") == "`a``b`"
+    assert sql_ident("a`b") == "`a``b`"
     with _pytest.raises(TypeError):
         _sql_lit(object())
     with _pytest.raises(TypeError):
@@ -139,6 +140,6 @@ def test_sql_lit_edge_cases(spark):
     # a column name carrying a backtick cannot break the quoting
     df3 = spark.createDataFrame([(1,), (None,)], ["a`b"])
     suite3 = ExpectationSuite(
-        "t", [Check("nn", f"{_sql_ident('a`b')} IS NOT NULL")])
+        "t", [Check("nn", f"{sql_ident('a`b')} IS NOT NULL")])
     [r3] = suite3.run(df3).collect()
     assert r3["violated"] == 1

@@ -57,25 +57,29 @@ def test_xxhash_profile_same_result(docs):
     assert a == b
 
 
-def test_decontam_pandas_strategy_equivalent(spark, sf_dir):
+def test_decontam_pandas_strategy_equivalent(spark, sf_dir, monkeypatch):
+    """The broadcast-set scan and the expr gram join flag the same
+    documents on the full fixture."""
     from pyspark.sql import functions as F
 
-    from datapump_spark.operators.decontam import decontaminate
+    from datapump_spark.operators import decontam as mod
     from datapump_spark.queries import _t
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.where(F.col("doc_id") % 20 == 0)
     corpus = docs.where(F.col("doc_id") % 20 != 0)
-    a = {tuple(r) for r in decontaminate(corpus, bench).collect()}
-    b = {tuple(r)
-         for r in decontaminate(corpus, bench, strategy="pandas").collect()}
+    a = {tuple(r) for r in mod.decontaminate(corpus, bench).collect()}
+    # force the gate down so the same benchmark takes the expr join
+    monkeypatch.setattr(mod, "AUTO_PANDAS_MAX_BENCH_ROWS", 0)
+    b = {tuple(r) for r in mod.decontaminate(corpus, bench).collect()}
     assert a == b
     assert any(r[2] for r in a)  # the fixture does contain contamination
 
 
 def test_decontam_auto_picks_by_measured_size(spark, sf_dir, monkeypatch):
-    """'auto' routes a small benchmark to the broadcast-set scan and a
-    benchmark over the gate to the expr join; both agree with 'expr'."""
+    """decontaminate routes a small benchmark to the broadcast-set scan
+    and a benchmark over the gate to the expr gram join; both flag the
+    same documents."""
     from pyspark.sql import functions as F
 
     from datapump_spark.operators import decontam as mod
@@ -85,17 +89,6 @@ def test_decontam_auto_picks_by_measured_size(spark, sf_dir, monkeypatch):
     bench = docs.where(F.col("doc_id") % 20 == 0)
     corpus = docs.where(F.col("doc_id") % 20 != 0).limit(50)
 
-    expr = {tuple(r)
-            for r in mod.decontaminate(corpus, bench, strategy="expr")
-            .collect()}
-    # small benchmark → pandas path (would raise inside expr-only changes)
-    auto_small = {tuple(r)
-                  for r in mod.decontaminate(corpus, bench, strategy="auto")
-                  .collect()}
-    assert auto_small == expr
-
-    # force the gate down so the same benchmark counts as "large" → expr
-    monkeypatch.setattr(mod, "AUTO_PANDAS_MAX_BENCH_ROWS", 0)
     called = {"pandas": False}
     orig = mod._decontaminate_pandas
 
@@ -104,11 +97,16 @@ def test_decontam_auto_picks_by_measured_size(spark, sf_dir, monkeypatch):
         return orig(*a, **k)
 
     monkeypatch.setattr(mod, "_decontaminate_pandas", spy)
-    auto_large = {tuple(r)
-                  for r in mod.decontaminate(corpus, bench, strategy="auto")
-                  .collect()}
-    assert auto_large == expr
+    small = {tuple(r)
+             for r in mod.decontaminate(corpus, bench).collect()}
+    assert called["pandas"]  # small benchmark → broadcast-set scan
+
+    # force the gate down so the same benchmark counts as "large" → expr
+    monkeypatch.setattr(mod, "AUTO_PANDAS_MAX_BENCH_ROWS", 0)
+    called["pandas"] = False
+    large = {tuple(r) for r in mod.decontaminate(corpus, bench).collect()}
     assert not called["pandas"]  # over the gate → expr join, no collect
+    assert small == large
 
 
 def test_decontam_swapped_args_guard(spark, sf_dir):

@@ -14,8 +14,7 @@ def streams(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text", "source")
     bench = docs.where(F.col("doc_id") % 20 == 0).select("doc_id", "text")
     corpus = docs.where(F.col("doc_id") % 20 != 0)
-    out = pretrain_corpus(corpus, bench,
-                          CorpusRecipe(min_words=10, decontam_strategy="expr"))
+    out = pretrain_corpus(corpus, bench, CorpusRecipe(min_words=10))
     return corpus, out
 
 

@@ -60,11 +60,10 @@ def test_recall_near_exact(emb, model):
 
 
 def test_scan_is_codegen_only(emb, model):
-    codes = sq8_encode(emb, model)
-    for df in (codes, sq8_topk(emb, model, k=5, codes=codes)):
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "BatchEvalPython" not in plan
-        assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+    plan = sq8_encode(emb, model)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert "BatchEvalPython" not in plan
+    assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
 
 
 def test_reconstruction_error_bounded(emb, model):
@@ -102,25 +101,3 @@ def test_short_or_empty_dimension_is_named(spark):
         "vec_id long, embedding array<double>")
     with pytest.raises(ValueError, match="dimension 1 .* has no values"):
         train_sq8(holes, normalize=False, dim=2)
-
-
-@pytest.mark.slow  # redundancy: q_sq8_topk (recall-gated bench
-# variant) runs the expr strategy per round and the no-cross-join
-# plan assertion stays in-default; GEMM-vs-expr equivalence is
-# full-tier-only (r12 tier move)
-def test_pandas_gemm_strategy_equivalent(emb, model):
-    """The Arrow-GEMM scan must agree with the codegen expr scan: same
-    re-ranked top-k sets, and raw approximate scores within float noise
-    (BLAS vs left-to-right summation order)."""
-    e = sq8_topk(emb, model, k=10, query_max_id=20, rerank_factor=4)
-    p = sq8_topk(emb, model, k=10, query_max_id=20, rerank_factor=4,
-                 strategy="pandas")
-    assert ({tuple(r) for r in e.collect()} == {tuple(r) for r in p.collect()})
-    raw_e = sq8_topk(emb, model, k=5, query_max_id=5).withColumnRenamed(
-        "score", "se")
-    raw_p = sq8_topk(emb, model, k=5, query_max_id=5, strategy="pandas") \
-        .withColumnRenamed("score", "sp")
-    joined = raw_e.join(raw_p, ["query_id", "neighbor_id"]).collect()
-    assert joined and all(abs(r["se"] - r["sp"]) <= 2e-6 for r in joined)
-    with pytest.raises(ValueError, match="strategy"):
-        sq8_topk(emb, model, k=1, strategy="nope")

@@ -157,13 +157,13 @@ def _emb(spark, sf_dir):
 
 
 def test_embedding_blocked_equals_global(spark, sf_dir):
-    """Default (blocked distributed GEMM, no driver collect) must be
-    EXACTLY the round-1 broadcast-GEMM baseline — same pairs, same cos."""
+    """The blocked distributed GEMM over 4 blocks must be EXACTLY one
+    whole-corpus GEMM (``n_blocks=1``) — same pairs, same cos."""
     from datapump_spark.operators.dedup_fuzzy import embedding_near_dup
 
     emb = _emb(spark, sf_dir)
     blocked = embedding_near_dup(emb, threshold=0.3, n_blocks=4)
-    global_ = embedding_near_dup(emb, threshold=0.3, strategy="gemm_global")
+    global_ = embedding_near_dup(emb, threshold=0.3, n_blocks=1)
     b = {(r.id_a, r.id_b): r.cos for r in blocked.collect()}
     g = {(r.id_a, r.id_b): r.cos for r in global_.collect()}
     assert b == g and len(b) > 0
@@ -409,3 +409,31 @@ def test_minhash_sweep_mode_exact_equality(docs):
         got = key(minhash_near_dup_pairs(docs, threshold=0.3,
                                          n_sweeps=n).collect())
         assert got == base, n
+
+
+def test_backtick_column_names_are_quoted(spark):
+    """Column names carrying a backtick reach the generated SQL quoted
+    (functions.hashing.sql_ident), so they neither break the parse nor
+    escape the identifier."""
+    from datapump_spark.operators.dedup_fuzzy import (
+        hamming_pairs,
+        lsh_candidate_pairs,
+    )
+    from datapump_spark.operators.fuzzy_join import edit_distance_pairs
+
+    sigs = spark.createDataFrame(
+        [(1, 5, 7, "a"), (2, 5, 9, "a"), (3, 5, 7, "b")],
+        ["doc_id", "mh0", "mh1", "sc`ope"])
+    pairs = lsh_candidate_pairs(sigs, "doc_id", bands=2, rows_per_band=1,
+                                scope_col="sc`ope")
+    assert {tuple(r) for r in pairs.collect()} == {(1, 2)}
+
+    docs = spark.createDataFrame(
+        [(1, "kitten"), (2, "kitteb"), (3, "zzz")], ["doc_id", "te`xt"])
+    near = edit_distance_pairs(docs, "doc_id", "te`xt", max_dist=1)
+    assert {tuple(r) for r in near.collect()} == {(1, 2, 1)}
+
+    hs = spark.createDataFrame(
+        [(1, 0b1010), (2, 0b1011), (3, 0b11110000)], ["id", "si`g"])
+    ham = hamming_pairs(hs, "id", "si`g", bits=8, max_hamming=1)
+    assert {tuple(r) for r in ham.collect()} == {(1, 2, 1)}

@@ -1,5 +1,5 @@
-"""Vocabulary build + token-id encoding: strategy equivalence,
-determinism, OOV handling, empty-doc handling."""
+"""Vocabulary build + token-id encoding: join semantics, determinism,
+OOV handling, empty-doc handling."""
 
 from __future__ import annotations
 
@@ -46,19 +46,6 @@ def test_encode_join_semantics(spark):
     # empty/null docs survive with empty arrays
     assert enc[4]["token_ids"] == [] and enc[4]["n_tokens"] == 0
     assert enc[5]["token_ids"] == [] and enc[5]["n_oov"] == 0
-
-
-def test_encode_pandas_matches_join(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    v = build_vocab(docs, top_k=100, min_count=2)
-    a = encode_tokens(docs, v, strategy="join")
-    b = encode_tokens(docs, v, strategy="pandas")
-    diff = a.join(b, "doc_id") \
-        .where((a["token_ids"] != b["token_ids"])
-               | (a["n_tokens"] != b["n_tokens"])
-               | (a["n_oov"] != b["n_oov"]))
-    assert diff.count() == 0
-    assert a.count() == docs.count() == b.count()
 
 
 def test_vocab_coverage(spark):
